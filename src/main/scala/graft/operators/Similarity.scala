@@ -25,10 +25,11 @@ import graft.functions.VectorFunctions
   *    rescoring, the billion-scale storage layout. [[ivfPqWriteIndex]] /
   *    [[ivfPqTopKStored]] persist it: PQ codes partitioned by frozen
   *    coarse cell, probe scans pruned to probed `cid=` partitions.
-  *  - [[nswTopK]] / [[nswBuild]] + [[nswSearchBuilt]]: partitioned
-  *    navigable-small-world graphs — the high-recall/low-latency serving
-  *    regime; each hash shard builds HNSW's layer-0 independently and
-  *    queries beam-search every shard.
+  *  - [[nswTopK]] / [[nswBuild]] + [[nswSearchBuilt]] and the [[hnswTopK]]
+  *    family: partitioned graph search — the high-recall/low-latency
+  *    serving regime; each hash shard builds one in-memory HNSW graph
+  *    independently (NSW: every node on layer 0) and queries beam-search
+  *    every shard.
   */
 object Similarity {
 
@@ -677,17 +678,23 @@ object Similarity {
       nc
     }
 
+  /** Driver-side cosine of two vectors; 0 when either is all-zero. */
+  private def cosine(a: Array[Double], b: Array[Double]): Double = {
+    var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
+    // sqrt(na)*sqrt(nb), NOT sqrt(na*nb): matches VectorFunctions.cosine
+    // (norm(a)*norm(b)) bit-for-bit so a driver-side score can be
+    // equality-compared against a Spark-side one (sqrt(na*nb) can differ
+    // by ~1 ulp and flip a 6th-decimal rounding boundary)
+    if (na == 0 || nb == 0) 0.0 else d / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** Euclidean norm of `v`. */
+  private def l2Norm(v: Array[Double]): Double = math.sqrt(v.map(x => x * x).sum)
+
   def ivfProbeCids(query: Array[Double], cents: Array[Array[Double]],
       nProbe: Int): Seq[Int] = {
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      // sqrt(na)*sqrt(nb), NOT sqrt(na*nb): matches VectorFunctions.cosine
-      // (norm(a)*norm(b)) bit-for-bit so a driver-side score can be
-      // equality-compared against a Spark-side one (r18 advice)
-      if (na == 0 || nb == 0) 0.0 else d / (math.sqrt(na) * math.sqrt(nb))
-    }
-    cents.zipWithIndex.map { case (c, i) => (cos(query, c), i) }
+    cents.zipWithIndex.map { case (c, i) => (cosine(query, c), i) }
       .sortBy { case (s, i) => (-s, i) }
       .take(nProbe).map(_._2).toSeq
   }
@@ -1047,8 +1054,6 @@ object Similarity {
     val qs = collectQueries(queries, qVecCol, qIdCol, maxQueries,
       "ivfPqTopKStoredJoin")
     if (qs.isEmpty) return emptyJoinResult(spark, qIdCol, idCol)
-    val m = books.length
-    val subDim = books.head.head.length
     val probePairs = qs.flatMap { case (qid, v) =>
       ivfProbeCids(v, cents, nProbe).map(cid => (qid, cid))
     }
@@ -1059,22 +1064,16 @@ object Similarity {
     // the plan; Q queries would mean Q plans and Q scans)
     val probesByQ = probePairs.groupBy(_._1)
     val qTable = qs.toSeq.map { case (qid, q) =>
-      val qNorm = math.sqrt(q.map(x => x * x).sum)
-      val dotTab = books.zipWithIndex.map { case (cb, sub) =>
-        cb.map(cent =>
-          (0 until subDim).map(i => q(sub * subDim + i) * cent(i)).sum).toSeq
-      }.toSeq
+      val t = adcTables(books, q)
       val qCentDot = cents.map(_.zip(q).map { case (a, b) => a * b }.sum).toSeq
-      (qid, probesByQ(qid).map(_._2).toSeq, dotTab, qCentDot, qNorm)
+      (qid, probesByQ(qid).map(_._2).toSeq, t.dot.map(_.toSeq).toSeq, qCentDot, t.qNorm)
     }.toDF(qIdCol, "__cids", "__dt", "__qc", "__qn")
       .withColumn("cid", explode(col("__cids"))).drop("__cids")
     val scan = readIvfPqIndex(spark, path, idCol, probeCids = Some(unionCids))
-    def lookupSum(tab: Column): Column =
-      aggregate(sequence(lit(0), lit(m - 1)), lit(0.0), (acc, i) =>
-        acc + element_at(element_at(tab, i + 1), element_at(col("codes"), i + 1) + 1))
     val scored = scan.join(broadcast(qTable), Seq("cid"))
       .withColumn("__approx",
-        round((element_at(col("__qc"), col("cid") + 1) + lookupSum(col("__dt"))) /
+        round((element_at(col("__qc"), col("cid") + 1) +
+          adcLookupSum(col("__dt"), col("codes"), books.length)) /
           col("__qn"), 6))
     val cands = joinCandidateCut(scored, qIdCol, idCol, oversample * k)
     exactRerankJoin(floats, cands, vecCol, idCol, qs, qIdCol, k)
@@ -1130,22 +1129,16 @@ object Similarity {
     */
   private def mmrGreedy(rows: Array[(Long, Array[Double])],
       query: Array[Double], k: Int, lambda: Double): Seq[(Long, Double, Int)] = {
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      // sqrt(na)*sqrt(nb) matches VectorFunctions.cosine bit-for-bit —
-      // the lambda=1 ≡ plain-top-k law compares these values for exact
-      // equality against the Spark-side scores (r18 advice: sqrt(na*nb)
-      // can differ by ~1 ulp and flip a 6th-decimal rounding boundary)
-      if (na == 0 || nb == 0) 0.0 else d / (math.sqrt(na) * math.sqrt(nb))
-    }
+    // cosine matches VectorFunctions.cosine bit-for-bit: the lambda=1 ≡
+    // plain-top-k law compares these values for exact equality against
+    // the Spark-side scores
     val n = rows.length
     // relevance rounds to 6 like every serving tail, and the ROUNDED
     // value drives selection too — otherwise lambda=1 could diverge
     // from the plain top-k's (rounded score desc, id) order on a
     // sub-rounding tie
     val simQ = rows.map(r =>
-      BigDecimal(cos(r._2, query)).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+      BigDecimal(cosine(r._2, query)).setScale(6, BigDecimal.RoundingMode.HALF_UP)
         .toDouble)
     val maxSimSel = Array.fill(n)(0.0)
     val taken = Array.fill(n)(false)
@@ -1179,7 +1172,7 @@ object Similarity {
       var j = 0
       while (j < n) {
         if (!taken(j)) {
-          val c = cos(rows(j)._2, rows(best)._2)
+          val c = cosine(rows(j)._2, rows(best)._2)
           if (c > maxSimSel(j)) maxSimSel(j) = c
         }
         j += 1
@@ -1853,6 +1846,48 @@ object Similarity {
     }: _*)
   }
 
+  /** Query-side ADC tables for PQ codebooks: per subspace, the query's
+    * partial dot with each centroid (`dot`) and each centroid's partial
+    * square norm (`nrm`), plus the query norm.
+    */
+  private final case class AdcTables(dot: Array[Array[Double]],
+      nrm: Array[Array[Double]], qNorm: Double)
+
+  private def adcTables(books: Array[Array[Array[Double]]],
+      query: Array[Double]): AdcTables = {
+    val subDim = books.head.head.length
+    require(query.length == books.length * subDim,
+      s"PQ search: query has ${query.length} dimensions but the codebooks " +
+        s"cover ${books.length * subDim} (${books.length} subspaces of $subDim)")
+    AdcTables(
+      dot = books.zipWithIndex.map { case (cents, sub) =>
+        cents.map(cent => (0 until subDim).map(i => query(sub * subDim + i) * cent(i)).sum)
+      },
+      nrm = books.map(_.map(cent => cent.map(x => x * x).sum)),
+      qNorm = l2Norm(query))
+  }
+
+  /** Sum over the `m` subspaces of `tab(sub)(codes(sub))` — one ADC table
+    * lookup per code, as a Spark column.
+    */
+  private def adcLookupSum(tab: Column, codes: Column, m: Int): Column =
+    aggregate(sequence(lit(0), lit(m - 1)), lit(0.0), (acc, i) =>
+      acc + element_at(element_at(tab, i + 1), element_at(codes, i + 1) + 1))
+
+  /** ADC cosine surrogate of one code against the query: dot over
+    * sqrt(square norm) of the reconstruction, 0 when degenerate.
+    */
+  private def adcScore(t: AdcTables, code: Array[Int]): Double = {
+    var d = 0.0; var n2 = 0.0
+    var sub = 0
+    while (sub < code.length) {
+      d += t.dot(sub)(code(sub)); n2 += t.nrm(sub)(code(sub))
+      sub += 1
+    }
+    val denom = t.qNorm * math.sqrt(n2)
+    if (denom > 1e-12) d / denom else 0.0
+  }
+
   /** Asymmetric-distance top-k from CODES ONLY — the 100 TB rescoring
     * path: the scan reads m ints per row, never the embedding column.
     * Score ≈ cos(query, reconstruction) via two m-lookups into literal
@@ -1861,24 +1896,17 @@ object Similarity {
     */
   def pqTopKEncoded(encoded: DataFrame, codeCol: String, idCol: String,
       books: Array[Array[Array[Double]]], query: Array[Double], k: Int): DataFrame = {
-    val subDim = books.head.head.length
-    val dotTab = books.zipWithIndex.map { case (cents, sub) =>
-      cents.map(cent => (0 until subDim).map(i => query(sub * subDim + i) * cent(i)).sum)
-    }
-    val nrmTab = books.map(_.map(cent => cent.map(x => x * x).sum))
-    val dotLit = array(dotTab.map(litArr).toIndexedSeq: _*)
-    val nrmLit = array(nrmTab.map(litArr).toIndexedSeq: _*)
-    val qNorm = math.sqrt(query.map(x => x * x).sum)
-    def lookupSum(tab: Column): Column =
-      aggregate(sequence(lit(0), lit(books.length - 1)), lit(0.0), (acc, i) =>
-        acc + element_at(element_at(tab, i + 1), element_at(col(codeCol), i + 1) + 1))
+    val t = adcTables(books, query)
+    val dotLit = array(t.dot.map(litArr).toIndexedSeq: _*)
+    val nrmLit = array(t.nrm.map(litArr).toIndexedSeq: _*)
+    def lookupSum(tab: Column): Column = adcLookupSum(tab, col(codeCol), books.length)
     // greatest(ε, ·): a row whose codes all hit zero-norm centroids (a
     // degenerate/empty training sample) would otherwise score NaN and sort
     // nondeterministically — the guard pins such rows to score 0, ranked
     // after any real match, deterministically
     encoded.select(col(idCol),
         round(lookupSum(dotLit) /
-          greatest(lit(1e-12), lit(qNorm) * sqrt(lookupSum(nrmLit))), 6).as("pq_sim"))
+          greatest(lit(1e-12), lit(t.qNorm) * sqrt(lookupSum(nrmLit))), 6).as("pq_sim"))
       .orderBy(col("pq_sim").desc, col(idCol))
       .limit(k)
   }
@@ -2045,25 +2073,86 @@ object Similarity {
   private[operators] def ivfPqAdcScores(encoded: DataFrame, idCol: String,
       cents: Array[Array[Double]], books: Array[Array[Array[Double]]],
       query: Array[Double]): DataFrame = {
-    val m = books.length
-    val subDim = books.head.head.length
-    val qNorm = math.sqrt(query.map(x => x * x).sum)
-    val dotTab = books.zipWithIndex.map { case (cb, sub) =>
-      cb.map(cent => (0 until subDim).map(i => query(sub * subDim + i) * cent(i)).sum)
-    }
+    val t = adcTables(books, query)
     val qCentDot = cents.map(_.zip(query).map { case (a, b) => a * b }.sum)
-    val dotLit = array(dotTab.map(litArr).toIndexedSeq: _*)
+    val dotLit = array(t.dot.map(litArr).toIndexedSeq: _*)
     val qcLit = litArr(qCentDot)
-    def lookupSum(tab: Column): Column =
-      aggregate(sequence(lit(0), lit(m - 1)), lit(0.0), (acc, i) =>
-        acc + element_at(element_at(tab, i + 1), element_at(col("codes"), i + 1) + 1))
     encoded.select(col(idCol),
-      round((element_at(qcLit, col("cid") + 1) + lookupSum(dotLit)) / lit(qNorm), 6)
+      round((element_at(qcLit, col("cid") + 1) +
+        adcLookupSum(dotLit, col("codes"), books.length)) / lit(t.qNorm), 6)
         .as("ivfpq_score"))
   }
 
-  // ---- graph ANN: partitioned NSW (Malkov et al.'s navigable-small-world
-  // family — HNSW's layer-0 construction/search, IS'14 / TPAMI'20) --------
+  // ---- graph ANN: one in-memory kernel for the NSW and HNSW tiers -------
+  //
+  // Both tiers run Malkov & Yashunin's HNSW (TPAMI'20) per hash shard,
+  // nodes entering in ascending-id order, and differ in two rules only
+  // (GraphTier): the LEVEL rule (NSW: every node on layer 0, the flat
+  // navigable small world of IS'14; HNSW: an id-hashed level) and the
+  // SEED rule (NSW: the layer-0 beam starts from nswEntries spread over
+  // the shard; HNSW: greedy ef = 1 descent from the top-level node). With
+  // every level at 0 an insert starts at node 0 with no descent and a 2m
+  // cap — exactly flat NSW construction — so every verb below serves both.
+  //
+  // CANONICAL NEIGHBOR ORDER: adjacency buffers stay sorted by local
+  // index (appending a new max index keeps the order; prunes re-sort).
+  // Beam results depend on neighbor order at the margin, so this is what
+  // makes the fused search, a reloaded index (persisted lists are
+  // id-sorted) and the replayed insert loop agree structurally.
+
+  private type Layers = Array[Array[scala.collection.mutable.ArrayBuffer[Int]]]
+
+  /** One graph tier: its stored adjacency column (NSW: flat `nbr_ids`
+    * `array<long>`; HNSW: `layer_nbrs` `array<array<long>>`, one list
+    * per layer up to the node's level), its output column prefix and its
+    * level and seed rules.
+    */
+  private final case class GraphTier(name: String, nbrCol: String, layered: Boolean) {
+    def simCol: String = s"${name}_sim"
+
+    /** Level rule: layer 0 for every NSW node; [[hnswLevel]] with
+      * mL = 1/ln m for HNSW.
+      */
+    def level(id: Long, m: Int): Int =
+      if (layered) hnswLevel(id, 1.0 / math.log(math.max(2, m))) else 0
+
+    /** Layer-0 beam search of one loaded shard from this tier's seeds
+      * (`entryCount` spread entries for NSW; the greedy descent from the
+      * top-level entry for HNSW, which routes through tombstoned nodes
+      * too — `eligible` gates only what the layer-0 beam returns).
+      */
+    def search(score: Int => Double, layers: Layers, levels: Array[Int], ef: Int,
+        entryCount: Int, eligible: Int => Boolean = _ => true): Array[(Int, Double)] = {
+      val n = levels.length
+      val seeds =
+        if (layered) {
+          val entry = levels.indexOf(levels.max)
+          Array(descend(score, layers, entry, levels(entry), 0, n))
+        } else nswEntries(n, entryCount)
+      beam(score, layers(0), seeds, ef, n, eligible)
+    }
+
+    /** The stored adjacency as layers; a flat list is its one layer. */
+    def readLayers: Column =
+      if (layered) col(nbrCol).cast("array<array<long>>")
+      else array(col(nbrCol).cast("array<long>"))
+
+    /** Store `nbrCol` (emitted as layers) in this tier's layout. */
+    def storeLayout(df: DataFrame): DataFrame =
+      if (layered) df else df.withColumn(nbrCol, col(nbrCol).getItem(0))
+
+    /** Node `j`'s per-layer neighbor ids. The flat tier re-sorts its list
+      * by local index on the way out; a reloaded list keeps its stored
+      * order otherwise, which only differs after an interleaved-id insert.
+      */
+    def layerIds(layers: Layers, levels: Array[Int], id: Int => Long, j: Int): Seq[Seq[Long]] =
+      (0 to levels(j)).map { l =>
+        val ns = layers(l)(j).toArray
+        (if (layered) ns else ns.sorted).toSeq.map(id)
+      }
+  }
+  private val NswTier = GraphTier("nsw", "nbr_ids", layered = false)
+  private val HnswTier = GraphTier("hnsw", "layer_nbrs", layered = true)
 
   /** Cosine similarity of local vector `i` against `q` (norms precomputed);
     * zero-norm rows score 0 (ranked last, deterministically).
@@ -2075,6 +2164,16 @@ object Similarity {
     while (j < v.length) { d += v(j) * q(j); j += 1 }
     val denom = norms(i) * qNorm
     if (denom > 0.0) d / denom else 0.0
+  }
+
+  /** The raw-vector node score: cosine of each local node against `q`. */
+  private def rawScore(vecs: Array[Array[Double]], norms: Array[Double],
+      q: Array[Double]): Int => Double = {
+    require(q.length == vecs(0).length,
+      s"graph search: query has ${q.length} dimensions but the indexed " +
+        s"vectors have ${vecs(0).length}")
+    val qNorm = l2Norm(q)
+    i => simTo(vecs, norms, i, q, qNorm)
   }
 
   /** Deterministic multi-entry seeds for a shard of `n` nodes: `h` local
@@ -2089,38 +2188,32 @@ object Similarity {
     Array.tabulate(k)(j => ((j.toLong * n) / k).toInt).distinct
   }
 
-  /** Greedy beam search over one in-memory NSW graph — HNSW's
-    * SEARCH-LAYER: expand the best unexpanded candidate, keep the `ef`
-    * best results, stop when the best candidate is worse than the worst
-    * kept result. Fully deterministic: similarity ties break toward the
-    * smaller local index. Returns up to `ef` (index, sim) pairs, best
-    * first. `bound` limits the search to the first `bound` nodes (the
-    * incremental-construction prefix). `entries` seeds the beam (single
-    * node 0 during construction, [[nswEntries]] spread at search time).
+  /** Deterministic HNSW level for a node id: the standard
+    * floor(-ln(u)·mL) draw with u derived from a splitmix64 hash of the id
+    * — stable across runs, shards, and physical layouts (no RNG state).
+    * Capped at 12 (a 10M-node shard at m=8 tops out around level 7).
     */
-  private def nswSearchLocal(vecs: Array[Array[Double]], norms: Array[Double],
-      adj: Array[scala.collection.mutable.ArrayBuffer[Int]], entries: Array[Int],
-      q: Array[Double], ef: Int, bound: Int,
-      eligible: Int => Boolean = _ => true): Array[(Int, Double)] = {
-    val qNorm = math.sqrt(q.map(x => x * x).sum)
-    nswSearchLocalBy(i => simTo(vecs, norms, i, q, qNorm), adj, entries, ef,
-      bound, eligible)
+  private def hnswLevel(id: Long, mL: Double): Int = {
+    var z = id + 0x9e3779b97f4a7c15L
+    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+    z = z ^ (z >>> 31)
+    val u = ((z >>> 11) + 0.5) / (1L << 53).toDouble // (0, 1)
+    math.min((-math.log(u) * mL).toInt, 12)
   }
 
-  /** [[nswSearchLocal]] generalized over the node-scoring function —
-    * true cosine for raw-vector shards, ADC lookups for codes-only shards.
+  /** The one beam search over one layer — HNSW's SEARCH-LAYER: expand the
+    * best unexpanded candidate, keep the `ef` best results, stop when the
+    * best candidate is worse than the worst kept result. Ties break toward
+    * the smaller local index. Returns up to `ef` (index, sim) pairs, best
+    * first, over the first `bound` nodes (the construction prefix).
     *
-    * `eligible` gates the RESULT heap only (tombstoned nodes under
-    * [[nswDeleteFromBuilt]]): an ineligible node is still visited,
-    * scored, and expanded — it keeps its role as a routing waypoint, so
-    * connectivity through deleted nodes is preserved — it just can never
-    * be returned. With the default (all eligible) the control flow is
-    * exactly the classic search: every enqueued candidate is also a
-    * result, so the termination read of `res.head` is always defined; in
-    * the gated form the cutoff simply stays off until `ef` ELIGIBLE
-    * results exist.
+    * `eligible` gates the RESULT heap only (tombstones under
+    * [[nswDeleteFromBuilt]]): an ineligible node is still visited, scored
+    * and expanded — a routing waypoint — but never returned; the cutoff
+    * stays off until `ef` eligible results exist.
     */
-  private def nswSearchLocalBy(score: Int => Double,
+  private def beam(score: Int => Double,
       adj: Array[scala.collection.mutable.ArrayBuffer[Int]], entries: Array[Int],
       ef: Int, bound: Int,
       eligible: Int => Boolean = _ => true): Array[(Int, Double)] = {
@@ -2167,192 +2260,78 @@ object Similarity {
     res.dequeueAll.toArray.reverse // best first
   }
 
-  /** In-memory NSW construction — HNSW's layer-0 insert loop: nodes enter
-    * in index order, each new node beam-searches the existing prefix
-    * (`efConstruction` beam) and links bidirectionally to its `m` nearest
-    * finds; neighbor lists cap at 2m, pruned back to the 2m nearest when
-    * an insertion overflows them (the simple-prune variant; determinism
-    * over the heuristic prune). Node 0 is the construction entry point.
-    *
-    * CANONICAL NEIGHBOR ORDER: every adjacency buffer is kept sorted by
-    * local index at all times (appends of a new max index preserve it;
-    * prunes re-sort). Beam results depend on neighbor iteration order at
-    * the margin, so a canonical order is what makes the fused search, a
-    * reloaded [[nswBuild]] index (persisted lists are id-sorted = local-
-    * index-sorted), and [[nswInsertAgainst]]'s replayed insert loop agree
-    * STRUCTURALLY rather than by luck.
+  /** Greedy ef = 1 descent from `cur` through layers `from` down to
+    * `to + 1`, over the first `bound` nodes; returns the node layer `to`
+    * is entered from.
     */
-  private def nswBuildLocal(vecs: Array[Array[Double]], norms: Array[Double],
-      m: Int, efConstruction: Int): Array[scala.collection.mutable.ArrayBuffer[Int]] = {
-    val n = vecs.length
-    val adj = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    var i = 1
-    while (i < n) {
-      nswInsertNode(vecs, norms, adj, i, m, efConstruction)
+  private def descend(score: Int => Double, layers: Layers, cur: Int,
+      from: Int, to: Int, bound: Int): Int = {
+    var c = cur
+    var l = from
+    while (l > to) {
+      c = beam(score, layers(l), Array(c), 1, bound).head._1
+      l -= 1
+    }
+    c
+  }
+
+  /** The one insert step: greedy-descend from the entry through the
+    * layers above node `i`'s level, then on each lower layer beam-search
+    * the first `i` nodes and link `i` to its `m` nearest, bidirectionally;
+    * a list past its cap (2m at layer 0, m above) is pruned back to its
+    * cap nearest (the simple prune — determinism over the heuristic one).
+    */
+  private def insertNode(vecs: Array[Array[Double]], norms: Array[Double],
+      layers: Layers, levels: Array[Int], entry: Int, top: Int, i: Int,
+      m: Int, efConstruction: Int): Unit = {
+    val score = rawScore(vecs, norms, vecs(i))
+    var cur = descend(score, layers, entry, top, levels(i), i)
+    var l = math.min(top, levels(i))
+    while (l >= 0) {
+      val adj = layers(l)
+      val found = beam(score, adj, Array(cur), efConstruction, i)
+      cur = found.head._1
+      val cap = if (l == 0) 2 * m else m
+      val nbrs = found.take(m).map(_._1)
+      adj(i) ++= nbrs.sorted // canonical local-index order
+      nbrs.foreach { nb =>
+        adj(nb) += i // i exceeds every existing member: stays sorted
+        if (adj(nb).length > cap) {
+          val qNorm = norms(nb)
+          val kept = adj(nb).toArray
+            .map(x => (x, simTo(vecs, norms, x, vecs(nb), qNorm)))
+            .sortBy { case (x, s) => (-s, x) }
+            .take(cap).map(_._1)
+          adj(nb).clear(); adj(nb) ++= kept.sorted
+        }
+      }
+      l -= 1
+    }
+  }
+
+  /** The one build loop: nodes `start until n` enter in index order on
+    * top of the graph over `0 until start` (1 builds from scratch; the
+    * replay starts past the carried nodes). The entry — the first node to
+    * reach the top level — moves only on a strictly higher level, so a
+    * replay continues the build node for node.
+    */
+  private def insertFrom(vecs: Array[Array[Double]], norms: Array[Double],
+      layers: Layers, levels: Array[Int], start: Int, m: Int,
+      efConstruction: Int): Unit = {
+    var top = levels.iterator.take(start).max
+    var entry = levels.indexOf(top)
+    var i = start
+    while (i < vecs.length) {
+      insertNode(vecs, norms, layers, levels, entry, top, i, m, efConstruction)
+      if (levels(i) > top) { entry = i; top = levels(i) }
       i += 1
     }
-    adj
   }
-
-  /** One insert step of the NSW construction loop: beam-search the first
-    * `i` nodes, link node `i` to its `m` nearest bidirectionally, prune
-    * overflowing lists to the 2m nearest. Shared verbatim by
-    * [[nswBuildLocal]] and [[nswInsertAgainst]] so the incremental path
-    * IS the construction loop, not a reimplementation of it.
-    */
-  private def nswInsertNode(vecs: Array[Array[Double]], norms: Array[Double],
-      adj: Array[scala.collection.mutable.ArrayBuffer[Int]], i: Int,
-      m: Int, efConstruction: Int): Unit = {
-    val maxM = 2 * m
-    val found = nswSearchLocal(vecs, norms, adj, Array(0), vecs(i), efConstruction, i)
-    val nbrs = found.take(m).map(_._1)
-    adj(i) ++= nbrs.sorted // canonical local-index order
-    nbrs.foreach { nb =>
-      adj(nb) += i // i exceeds every existing member: stays sorted
-      if (adj(nb).length > maxM) {
-        val qNorm = norms(nb)
-        val kept = adj(nb).toArray
-          .map(x => (x, simTo(vecs, norms, x, vecs(nb), qNorm)))
-          .sortBy { case (x, s) => (-s, x) }
-          .take(maxM).map(_._1)
-        adj(nb).clear(); adj(nb) ++= kept.sorted
-      }
-    }
-  }
-
-  /** Partitioned NSW graph ANN — the high-recall/low-latency serving
-    * layout alongside IVF-PQ: vectors hash-shard into `nParts` independent
-    * graphs (parallel construction — each shard is HNSW's layer-0 built in
-    * one task), a query beam-searches every shard and the per-shard top-k
-    * merge by a TakeOrdered. Deterministic end to end: insertion order is
-    * ascending id within a shard, similarity ties break toward smaller
-    * ids, so the emitted top-k is stable across runs and layouts.
-    *
-    * At scale the shard is the serving-RAM unit: size `nParts` so one
-    * shard's (vectors + adjacency) fits an executor (~10M × 64d × 8B ≈
-    * 5 GB); construction is one shuffle by id + an embarrassingly parallel
-    * build, and the built graph ([[nswBuild]]) persists as plain
-    * (id, neighbor-ids) rows — pair it with [[pqEncode]] codes instead of
-    * raw vectors for codes-only serving storage, the same trade as IVFADC.
-    * Recall is approximate by construction (greedy search; cross-shard
-    * exactness only in the merge) — recall-vs-brute and needle laws live
-    * in ApproxOpsSpec.
-    */
-  def nswTopK(df: DataFrame, vecCol: String, idCol: String,
-      query: Array[Double], k: Int, nParts: Int = 4, m: Int = 8,
-      efConstruction: Int = 64, efSearch: Int = 64, entryCount: Int = 4): DataFrame = {
-    val session = df.sparkSession
-    import session.implicits._
-    val q = query
-    val kk = k
-    df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Seq[Double])]
-      .repartition(nParts, col(idCol))
-      .mapPartitions { it =>
-        val rows = it.toArray.sortBy(_._1)
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val vecs = rows.map(_._2.toArray)
-          val norms = vecs.map(v => math.sqrt(v.map(x => x * x).sum))
-          val adj = nswBuildLocal(vecs, norms, m, efConstruction)
-          nswSearchLocal(vecs, norms, adj, nswEntries(vecs.length, entryCount),
-              q, math.max(efSearch, kk), vecs.length)
-            .take(kk).iterator.map { case (i, s) => (rows(i)._1, s) }
-        }
-      }
-      .toDF(idCol, "__s")
-      .select(col(idCol), round(col("__s"), 6).as("nsw_sim"))
-      .orderBy(col("nsw_sim").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** [[nswTopK]] for a TABLE of query vectors: the queries collect to the
-    * driver (bounded — the same small-Q contract as
-    * [[bruteForceTopKJoin]]'s broadcast) and every shard beam-searches
-    * each query against its one graph build; per-query shard results
-    * merge by a window rank. Output (qIdCol, idCol, nsw_sim).
-    */
-  def nswTopKJoin(df: DataFrame, vecCol: String, idCol: String,
-      queries: DataFrame, qVecCol: String, qIdCol: String, k: Int,
-      nParts: Int = 4, m: Int = 8, efConstruction: Int = 64,
-      efSearch: Int = 64, maxQueries: Int = 4096, entryCount: Int = 4): DataFrame = {
-    val session = df.sparkSession
-    import session.implicits._
-    val kk = k
-    val qs: Array[(Long, Array[Double])] = queries
-      .select(col(qIdCol).cast("long"), col(qVecCol).cast("array<double>"))
-      .as[(Long, Seq[Double])]
-      .limit(maxQueries + 1).collect().map { case (i, v) => (i, v.toArray) }
-    require(qs.length <= maxQueries,
-      s"nswTopKJoin query table exceeds maxQueries=$maxQueries — " +
-        "batch the queries or raise the bound consciously")
-    val perShard = df
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Seq[Double])]
-      .repartition(nParts, col(idCol))
-      .mapPartitions { it =>
-        val rows = it.toArray.sortBy(_._1)
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val vecs = rows.map(_._2.toArray)
-          val norms = vecs.map(v => math.sqrt(v.map(x => x * x).sum))
-          val adj = nswBuildLocal(vecs, norms, m, efConstruction)
-          val entries = nswEntries(vecs.length, entryCount)
-          qs.iterator.flatMap { case (qid, q) =>
-            nswSearchLocal(vecs, norms, adj, entries, q, math.max(efSearch, kk), vecs.length)
-              .take(kk).iterator.map { case (i, s) => (qid, rows(i)._1, s) }
-          }
-        }
-      }
-      .toDF(qIdCol, idCol, "__s")
-    val w = Window.partitionBy(col(qIdCol)).orderBy(col("__s").desc, col(idCol))
-    perShard.withColumn("__rank", row_number().over(w))
-      .where(col("__rank") <= k)
-      .select(col(qIdCol), col(idCol), round(col("__s"), 6).as("nsw_sim"))
-  }
-
-  /** Materialized NSW adjacency — (id, nbr_ids) rows per shard, the
-    * persistable serving index. Search with [[nswSearchBuilt]] using the
-    * SAME `nParts` (hash co-location restores each shard's graph).
-    */
-  def nswBuild(df: DataFrame, vecCol: String, idCol: String,
-      nParts: Int = 4, m: Int = 8, efConstruction: Int = 64): DataFrame = {
-    val session = df.sparkSession
-    import session.implicits._
-    df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Seq[Double])]
-      .repartition(nParts, col(idCol))
-      .mapPartitions { it =>
-        val rows = it.toArray.sortBy(_._1)
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val vecs = rows.map(_._2.toArray)
-          val norms = vecs.map(v => math.sqrt(v.map(x => x * x).sum))
-          val adj = nswBuildLocal(vecs, norms, m, efConstruction)
-          rows.indices.iterator.map { i =>
-            (rows(i)._1, rows(i)._2, adj(i).toArray.sorted.map(j => rows(j)._1))
-          }
-        }
-      }
-      .toDF(idCol, vecCol, "nbr_ids")
-  }
-
-  /** Codes-only serving index from a [[nswBuild]] result: the raw vector
-    * column is REPLACED by its PQ code (dim doubles → m small ints, the
-    * same 32x trade as [[pqTopKEncoded]]), keeping only
-    * (id, pq_code, nbr_ids) — the graph was built on true distances, the
-    * stored index carries none. Search with [[nswSearchCoded]] and the
-    * same codebooks.
-    */
-  def nswEncodeIndex(index: DataFrame, vecCol: String, idCol: String,
-      books: Array[Array[Array[Double]]]): DataFrame =
-    index.select(col(idCol), pqEncode(col(vecCol), books).as("pq_code"),
-      col("nbr_ids"))
 
   /** Resolve a persisted neighbor-id list against the shard's id→local-index
-    * map. Every reference MUST resolve: [[nswBuild]]'s graphs are closed
-    * within a shard, so a dangling id means the index is being searched with
-    * a different `nParts` than it was built with — the hash re-split would
+    * map. Every reference MUST resolve: built graphs are closed within a
+    * shard, so a dangling id means the index is being searched with a
+    * different `nParts` than it was built with — the hash re-split would
     * fragment every shard's graph and recall would collapse silently. Fail
     * loudly instead of dropping the edge.
     */
@@ -2372,127 +2351,428 @@ object Similarity {
     buf
   }
 
-  /** Beam-search a codes-only [[nswEncodeIndex]] shard set: node scores
-    * are ADC lookups (the [[pqTopKEncoded]] cosine surrogate — query-side
-    * tables computed once on the driver, one m-entry sum per visited
-    * node), so the scan touches m ints per node and never a vector.
-    * Approximate twice over (graph greediness + quantization); the
-    * planted-needle law pins that an exact copy of the query still
-    * surfaces — its ADC score dominates natural neighbors by the same
-    * margin as q_ann_pq.
+  /** The one shard loader: `n` nodes on `levels`, of which the first
+    * `carried.length` bring persisted (id, per-layer neighbor ids) lists,
+    * resolved through `idx`; the rest start unlinked.
     */
-  def nswSearchCoded(coded: DataFrame, idCol: String,
-      books: Array[Array[Array[Double]]], query: Array[Double], k: Int,
-      nParts: Int = 4, efSearch: Int = 64, entryCount: Int = 4): DataFrame = {
-    val session = coded.sparkSession
-    import session.implicits._
-    val kk = k
-    val subDim = books.head.head.length
-    val dotTab = books.zipWithIndex.map { case (cents, sub) =>
-      cents.map(cent => (0 until subDim).map(i => query(sub * subDim + i) * cent(i)).sum)
+  private def loadLayers(carried: Array[(Long, Seq[Seq[Long]])], n: Int,
+      levels: Array[Int], idx: scala.collection.Map[Long, Int]): Layers = {
+    val layers = Array.fill(levels.max + 1, n)(scala.collection.mutable.ArrayBuffer.empty[Int])
+    carried.indices.foreach { i =>
+      carried(i)._2.indices.foreach { l =>
+        layers(l)(i) = resolveNbrs(carried(i)._1, carried(i)._2(l), idx)
+      }
     }
-    val nrmTab = books.map(_.map(cent => cent.map(x => x * x).sum))
-    val qNorm = math.sqrt(query.map(x => x * x).sum)
-    val delCol = (if (coded.columns.contains("nsw_deleted")) col("nsw_deleted")
-      else lit(false)).cast("boolean").as("__del")
-    coded.select(col(idCol).cast("long"), col("pq_code").cast("array<int>"),
-        col("nbr_ids").cast("array<long>"), delCol)
-      .as[(Long, Seq[Int], Seq[Long], Boolean)]
+    layers
+  }
+
+  /** Hash-shard `df` by id and build each shard's graph in memory from
+    * scratch, handing (rows, vectors, norms, layers, levels) to `emit`.
+    */
+  private def buildShards[T: org.apache.spark.sql.Encoder](tier: GraphTier,
+      df: DataFrame, vecCol: String, idCol: String, nParts: Int, m: Int,
+      efConstruction: Int)(emit: (Array[(Long, Seq[Double])], Array[Array[Double]],
+        Array[Double], Layers, Array[Int]) => Iterator[T]): org.apache.spark.sql.Dataset[T] = {
+    val session = df.sparkSession
+    import session.implicits._
+    df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
+      .as[(Long, Seq[Double])]
       .repartition(nParts, col(idCol))
       .mapPartitions { it =>
         val rows = it.toArray.sortBy(_._1)
         if (rows.isEmpty) Iterator.empty
         else {
-          val idx = rows.iterator.map(_._1).zipWithIndex.toMap
-          val codes = rows.map(_._2.toArray)
-          val adj = rows.map(r => resolveNbrs(r._1, r._3, idx))
-          val alive = rows.map(r => !r._4)
-          def adcScore(i: Int): Double = {
-            val code = codes(i)
-            var d = 0.0; var n2 = 0.0
-            var sub = 0
-            while (sub < code.length) {
-              d += dotTab(sub)(code(sub)); n2 += nrmTab(sub)(code(sub))
-              sub += 1
-            }
-            val denom = qNorm * math.sqrt(n2)
-            if (denom > 1e-12) d / denom else 0.0
-          }
-          nswSearchLocalBy(adcScore, adj, nswEntries(rows.length, entryCount),
-              math.max(efSearch, kk), rows.length, i => alive(i))
-            .take(kk).iterator.map { case (i, s) => (rows(i)._1, s) }
+          val vecs = rows.map(_._2.toArray)
+          val norms = vecs.map(l2Norm)
+          val levels = rows.map(r => tier.level(r._1, m))
+          val layers = loadLayers(Array.empty, rows.length, levels, Map.empty)
+          insertFrom(vecs, norms, layers, levels, 1, m, efConstruction)
+          emit(rows, vecs, norms, layers, levels)
         }
       }
-      .toDF(idCol, "__s")
-      .select(col(idCol), round(col("__s"), 6).as("nsw_pq_sim"))
-      .orderBy(col("nsw_pq_sim").desc, col(idCol))
-      .limit(k)
   }
 
-  /** Beam-search a [[nswBuild]] index: same `nParts` re-shards the rows
-    * into the graphs they were built in (a mismatched `nParts` fails loudly
-    * via [[resolveNbrs]]); emits the global top-k. The beam seeds from
-    * [[nswEntries]] spread over each shard — identical to the fused
-    * [[nswTopK]] (equality law in ApproxOpsSpec).
+  /** Build every shard once and search each query of `qs` against it:
+    * (qIdCol, idCol, __s) rows, up to k per query per shard.
     */
-  def nswSearchBuilt(index: DataFrame, vecCol: String, idCol: String,
-      query: Array[Double], k: Int, nParts: Int = 4,
-      efSearch: Int = 64, entryCount: Int = 4): DataFrame = {
+  private def fusedSearch(tier: GraphTier, df: DataFrame, vecCol: String,
+      idCol: String, qs: Array[(Long, Array[Double])], qIdCol: String, k: Int,
+      nParts: Int, m: Int, efConstruction: Int, efSearch: Int,
+      entryCount: Int): DataFrame = {
+    val session = df.sparkSession
+    import session.implicits._
+    val kk = k
+    buildShards(tier, df, vecCol, idCol, nParts, m, efConstruction) {
+      (rows, vecs, norms, layers, levels) =>
+        qs.iterator.flatMap { case (qid, q) =>
+          tier.search(rawScore(vecs, norms, q), layers, levels,
+              math.max(efSearch, kk), entryCount)
+            .take(kk).iterator.map { case (i, s) => (qid, rows(i)._1, s) }
+        }
+    }.toDF(qIdCol, idCol, "__s")
+  }
+
+  private def fusedTopK(tier: GraphTier, df: DataFrame, vecCol: String,
+      idCol: String, query: Array[Double], k: Int, nParts: Int, m: Int,
+      efConstruction: Int, efSearch: Int, entryCount: Int): DataFrame =
+    fusedSearch(tier, df, vecCol, idCol, Array((0L, query)), "__q", k, nParts,
+        m, efConstruction, efSearch, entryCount)
+      .select(col(idCol), round(col("__s"), 6).as(tier.simCol))
+      .orderBy(col(tier.simCol).desc, col(idCol))
+      .limit(k)
+
+  private def fusedTopKJoin(tier: GraphTier, df: DataFrame, vecCol: String,
+      idCol: String, queries: DataFrame, qVecCol: String, qIdCol: String, k: Int,
+      nParts: Int, m: Int, efConstruction: Int, efSearch: Int, maxQueries: Int,
+      entryCount: Int): DataFrame = {
+    val session = df.sparkSession
+    import session.implicits._
+    val qs: Array[(Long, Array[Double])] = queries
+      .select(col(qIdCol).cast("long"), col(qVecCol).cast("array<double>"))
+      .as[(Long, Seq[Double])]
+      .limit(maxQueries + 1).collect().map { case (i, v) => (i, v.toArray) }
+    require(qs.length <= maxQueries,
+      s"${tier.name}TopKJoin query table exceeds maxQueries=$maxQueries — " +
+        "batch the queries or raise the bound consciously")
+    val w = Window.partitionBy(col(qIdCol)).orderBy(col("__s").desc, col(idCol))
+    fusedSearch(tier, df, vecCol, idCol, qs, qIdCol, k, nParts, m,
+        efConstruction, efSearch, entryCount)
+      .withColumn("__rank", row_number().over(w))
+      .where(col("__rank") <= k)
+      .select(col(qIdCol), col(idCol), round(col("__s"), 6).as(tier.simCol))
+  }
+
+  /** Materialized graph: (id, vec, adjacency) rows per shard in the
+    * tier's stored layout.
+    */
+  private def buildFrame(tier: GraphTier, df: DataFrame, vecCol: String,
+      idCol: String, nParts: Int, m: Int, efConstruction: Int): DataFrame = {
+    val session = df.sparkSession
+    import session.implicits._
+    tier.storeLayout(buildShards(tier, df, vecCol, idCol, nParts, m, efConstruction) {
+      (rows, _, _, layers, levels) =>
+        rows.indices.iterator.map { i =>
+          (rows(i)._1, rows(i)._2, tier.layerIds(layers, levels, rows(_)._1, i))
+        }
+    }.toDF(idCol, vecCol, tier.nbrCol))
+  }
+
+  /** The one stored-shard search: re-shard an index by id (the SAME
+    * `nParts` restores each shard's graph), load each shard and search it
+    * with the node score `scorer` derives from the payload column.
+    * Tombstones (`nsw_deleted`) are never returned but still route.
+    */
+  private def searchStored[P: scala.reflect.runtime.universe.TypeTag: scala.reflect.ClassTag](
+      tier: GraphTier, index: DataFrame, payload: Column, idCol: String,
+      simCol: String, k: Int, nParts: Int, efSearch: Int, entryCount: Int)(
+      scorer: Array[P] => Int => Double): DataFrame = {
     val session = index.sparkSession
     import session.implicits._
-    val q = query
     val kk = k
     val delCol = (if (index.columns.contains("nsw_deleted")) col("nsw_deleted")
       else lit(false)).cast("boolean").as("__del")
-    index.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"),
-        col("nbr_ids").cast("array<long>"), delCol)
-      .as[(Long, Seq[Double], Seq[Long], Boolean)]
+    index.select(col(idCol).cast("long"), payload, tier.readLayers, delCol)
+      .as[(Long, P, Seq[Seq[Long]], Boolean)]
       .repartition(nParts, col(idCol))
       .mapPartitions { it =>
         val rows = it.toArray.sortBy(_._1)
         if (rows.isEmpty) Iterator.empty
         else {
           val idx = rows.iterator.map(_._1).zipWithIndex.toMap
-          val vecs = rows.map(_._2.toArray)
-          val norms = vecs.map(v => math.sqrt(v.map(x => x * x).sum))
-          val adj = rows.map(r => resolveNbrs(r._1, r._3, idx))
+          val levels = rows.map(_._3.length - 1)
+          val layers = loadLayers(rows.map(r => (r._1, r._3)), rows.length, levels, idx)
           val alive = rows.map(r => !r._4)
-          nswSearchLocal(vecs, norms, adj, nswEntries(vecs.length, entryCount),
-              q, math.max(efSearch, kk), vecs.length, i => alive(i))
+          tier.search(scorer(rows.map(_._2)), layers, levels, math.max(efSearch, kk),
+              entryCount, i => alive(i))
             .take(kk).iterator.map { case (i, s) => (rows(i)._1, s) }
         }
       }
       .toDF(idCol, "__s")
-      .select(col(idCol), round(col("__s"), 6).as("nsw_sim"))
-      .orderBy(col("nsw_sim").desc, col(idCol))
+      .select(col(idCol), round(col("__s"), 6).as(simCol))
+      .orderBy(col(simCol).desc, col(idCol))
       .limit(k)
   }
 
-  /** Takedown for the persisted GRAPH indexes — HNSW-style tombstones:
-    * marks `ids` deleted in an [[nswBuild]] adjacency frame (or an
-    * [[nswEncodeIndex]] codes frame — the mark is a plain column join on
-    * `idCol`). A tombstoned node is never RETURNED by
-    * [[nswSearchBuilt]] / [[nswSearchCoded]] but is still traversed as a
-    * routing waypoint, so graph connectivity through deleted nodes is
-    * preserved — naively filtering rows would sever paths (and fails
-    * loudly at [[resolveNbrs]], by design). Marks compose: re-deleting
-    * ORs into an existing `nsw_deleted` column; never-indexed ids are a
-    * harmless no-op (left join finds nothing).
+  private def searchBuilt(tier: GraphTier, index: DataFrame, vecCol: String,
+      idCol: String, query: Array[Double], k: Int, nParts: Int, efSearch: Int,
+      entryCount: Int): DataFrame = {
+    val q = query
+    searchStored[Seq[Double]](tier, index, col(vecCol).cast("array<double>"), idCol,
+        tier.simCol, k, nParts, efSearch, entryCount) { ps =>
+      val vecs = ps.map(_.toArray)
+      rawScore(vecs, vecs.map(l2Norm), q)
+    }
+  }
+
+  /** Codes-only search by ADC lookups ([[adcScore]], tables built once
+    * on the driver): m ints per visited node, never a vector.
+    */
+  private def searchCoded(tier: GraphTier, coded: DataFrame, idCol: String,
+      books: Array[Array[Array[Double]]], query: Array[Double], k: Int,
+      nParts: Int, efSearch: Int, entryCount: Int): DataFrame = {
+    val t = adcTables(books, query)
+    searchStored[Seq[Int]](tier, coded, col("pq_code").cast("array<int>"), idCol,
+        s"${tier.name}_pq_sim", k, nParts, efSearch, entryCount) { ps =>
+      val codes = ps.map(_.toArray)
+      i => adcScore(t, codes(i))
+    }
+  }
+
+  /** The one insert replay: each shard loads its carried graph as the
+    * local prefix and runs the build loop over the new nodes after it,
+    * emitting the grown graph with an `nsw_changed` flag (new nodes, and
+    * nodes whose adjacency on any layer differs from the carried one).
+    */
+  private def insertFlagged(tier: GraphTier, index: DataFrame, newRows: DataFrame,
+      vecCol: String, idCol: String, nParts: Int, m: Int,
+      efConstruction: Int): DataFrame = {
+    val session = index.sparkSession
+    import session.implicits._
+    val label = s"${tier.name}InsertAgainst"
+    val old = index.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"),
+      tier.readLayers.as("__nbrs"))
+    val fresh = newRows.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"),
+      lit(null).cast("array<array<long>>").as("__nbrs"))
+    tier.storeLayout(old.unionByName(fresh)
+      .as[(Long, Seq[Double], Seq[Seq[Long]])]
+      .repartition(nParts, col(idCol))
+      .mapPartitions { it =>
+        val all = it.toArray.sortBy(_._1)
+        if (all.isEmpty) Iterator.empty
+        else {
+          val existing = all.filter(_._3 != null)
+          val added = all.filter(_._3 == null)
+          // locals 0..p-1 are the indexed rows in id order; the graph they
+          // carry references only ids in this set (resolveNbrs enforces it)
+          val rows = existing ++ added
+          val idx = existing.iterator.map(_._1).zipWithIndex.toMap
+          // NEW means new: a re-delivered batch (at-least-once ingest) would
+          // otherwise emit duplicate-id rows and a silently corrupted index
+          added.foreach { r =>
+            if (idx.contains(r._1)) throw new IllegalArgumentException(
+              s"$label: id ${r._1} is already in the index — newRows must " +
+              "contain only unindexed ids (dedup the ingest batch against the index first)")
+          }
+          val levels = rows.map(r => tier.level(r._1, m))
+          // HNSW levels depend on m: a persisted level that disagrees with
+          // the re-derived one means this call's m differs from the
+          // build's — the same contract breach as a mismatched nParts
+          existing.indices.foreach { i =>
+            if (existing(i)._3.length - 1 != levels(i)) throw new IllegalArgumentException(
+              s"$label: node ${existing(i)._1} was built at level " +
+              s"${existing(i)._3.length - 1} but m=$m derives level ${levels(i)} — " +
+              s"the insert must use the SAME m as the original ${tier.name}Build")
+          }
+          val vecs = rows.map(_._2.toArray)
+          val norms = vecs.map(l2Norm)
+          val layers = loadLayers(existing.map(r => (r._1, r._3)), rows.length, levels, idx)
+          // node 0 of an all-new shard has no prefix to insert into
+          insertFrom(vecs, norms, layers, levels, math.max(existing.length, 1), m,
+            efConstruction)
+          rows.indices.iterator.map { j =>
+            val ls = tier.layerIds(layers, levels, rows(_)._1, j)
+            // changed ⇔ new node or any layer's final list differs from the
+            // carried one (compared order-free, so layout-proof)
+            val changed = j >= existing.length || {
+              val orig = existing(j)._3
+              ls.length != orig.length || ls.indices.exists(l =>
+                !java.util.Arrays.equals(ls(l).toArray.sorted, orig(l).toArray.sorted))
+            }
+            (rows(j)._1, rows(j)._2, ls, changed)
+          }
+        }
+      }
+      .toDF(idCol, vecCol, tier.nbrCol, "nsw_changed"))
+  }
+
+  /** [[insertFlagged]] restricted to the rows the insert TOUCHED — each
+    * new node relinks at most `m` nodes per layer, so O(|batch|·m) rows
+    * regardless of index size: the delta segment stored appends persist.
+    */
+  private def insertDelta(tier: GraphTier, index: DataFrame, newRows: DataFrame,
+      vecCol: String, idCol: String, nParts: Int, m: Int,
+      efConstruction: Int): DataFrame =
+    insertFlagged(tier, index, newRows, vecCol, idCol, nParts, m, efConstruction)
+      .where(col("nsw_changed")).drop("nsw_changed")
+
+  /** Partitioned NSW graph ANN — the high-recall/low-latency serving
+    * layout alongside IVF-PQ: vectors hash-shard into `nParts` independent
+    * flat graphs, a query beam-searches every shard from `entryCount`
+    * spread seeds and the per-shard top-k merge by a TakeOrdered.
+    * Deterministic across runs and layouts (ascending-id insertion,
+    * smaller-id ties). The shard is the serving-RAM unit: size `nParts` so
+    * one shard's vectors + adjacency fit an executor. Recall laws live in
+    * ApproxOpsSpec.
+    */
+  def nswTopK(df: DataFrame, vecCol: String, idCol: String,
+      query: Array[Double], k: Int, nParts: Int = 4, m: Int = 8,
+      efConstruction: Int = 64, efSearch: Int = 64, entryCount: Int = 4): DataFrame =
+    fusedTopK(NswTier, df, vecCol, idCol, query, k, nParts, m, efConstruction,
+      efSearch, entryCount)
+
+  /** [[nswTopK]] for a TABLE of query vectors: the queries collect to the
+    * driver (bounded by `maxQueries` — the same small-Q contract as
+    * [[bruteForceTopKJoin]]'s broadcast) and every shard searches each
+    * query against its one graph build; per-query shard results merge by
+    * a window rank. Output (qIdCol, idCol, nsw_sim).
+    */
+  def nswTopKJoin(df: DataFrame, vecCol: String, idCol: String,
+      queries: DataFrame, qVecCol: String, qIdCol: String, k: Int,
+      nParts: Int = 4, m: Int = 8, efConstruction: Int = 64,
+      efSearch: Int = 64, maxQueries: Int = 4096, entryCount: Int = 4): DataFrame =
+    fusedTopKJoin(NswTier, df, vecCol, idCol, queries, qVecCol, qIdCol, k,
+      nParts, m, efConstruction, efSearch, maxQueries, entryCount)
+
+  /** Materialized NSW adjacency — (id, vec, nbr_ids) rows per shard, the
+    * persistable serving index. Search with [[nswSearchBuilt]] using the
+    * SAME `nParts` (hash co-location restores each shard's graph).
+    */
+  def nswBuild(df: DataFrame, vecCol: String, idCol: String,
+      nParts: Int = 4, m: Int = 8, efConstruction: Int = 64): DataFrame =
+    buildFrame(NswTier, df, vecCol, idCol, nParts, m, efConstruction)
+
+  /** Codes-only serving index from a [[nswBuild]] result: the raw vector
+    * column is REPLACED by its PQ code (dim doubles → m small ints, the
+    * same 32x trade as [[pqTopKEncoded]]), keeping only
+    * (id, pq_code, nbr_ids) — the graph was built on true distances, the
+    * stored index carries none. Search with [[nswSearchCoded]] and the
+    * same codebooks.
+    */
+  def nswEncodeIndex(index: DataFrame, vecCol: String, idCol: String,
+      books: Array[Array[Array[Double]]]): DataFrame =
+    index.select(col(idCol), pqEncode(col(vecCol), books).as("pq_code"),
+      col(NswTier.nbrCol))
+
+  /** Beam-search a codes-only [[nswEncodeIndex]] shard set by ADC lookups
+    * (the [[pqTopKEncoded]] cosine surrogate). Approximate twice over
+    * (graph greediness + quantization); the planted-needle law pins that
+    * an exact copy of the query still surfaces. Output (idCol, nsw_pq_sim).
+    */
+  def nswSearchCoded(coded: DataFrame, idCol: String,
+      books: Array[Array[Array[Double]]], query: Array[Double], k: Int,
+      nParts: Int = 4, efSearch: Int = 64, entryCount: Int = 4): DataFrame =
+    searchCoded(NswTier, coded, idCol, books, query, k, nParts, efSearch, entryCount)
+
+  /** Beam-search a [[nswBuild]] index: same `nParts` re-shards the rows
+    * into the graphs they were built in; emits the global top-k. The beam
+    * seeds exactly as the fused [[nswTopK]] does, so the two agree
+    * (equality law in ApproxOpsSpec).
+    */
+  def nswSearchBuilt(index: DataFrame, vecCol: String, idCol: String,
+      query: Array[Double], k: Int, nParts: Int = 4,
+      efSearch: Int = 64, entryCount: Int = 4): DataFrame =
+    searchBuilt(NswTier, index, vecCol, idCol, query, k, nParts, efSearch, entryCount)
+
+  /** Incremental index maintenance — insert a batch of NEW vectors into a
+    * persisted [[nswBuild]] index without rebuilding the shard graphs (the
+    * `Dedup.exactAgainst` daily-ingest contract; SAME `nParts`/`m`/
+    * `efConstruction` as the build). One shuffle of (index rows + new
+    * rows); each shard replays the build loop over just the new nodes.
+    * When every new id exceeds every indexed id (append-only ingest) the
+    * result is IDENTICAL to `nswBuild(old ∪ new)` (equality law in
+    * ApproxOpsSpec, gate row q_ann_nsw_incr); interleaved ids still give a
+    * valid graph. Ids already in the index (tombstoned waypoints
+    * included) are refused. Extend a codes-only index by [[pqEncode]]
+    * against the stored, frozen codebooks.
+    */
+  def nswInsertAgainst(index: DataFrame, newRows: DataFrame, vecCol: String,
+      idCol: String, nParts: Int = 4, m: Int = 8,
+      efConstruction: Int = 64): DataFrame =
+    insertFlagged(NswTier, index, newRows, vecCol, idCol, nParts, m, efConstruction)
+      .drop("nsw_changed")
+
+  /** Partitioned hierarchical NSW (full HNSW per hash shard) — the
+    * large-shard serving layout: where [[nswTopK]] leans on multi-entry
+    * seeding to hold recall as shards grow, the upper layers give the real
+    * logarithmic skip structure, so one shard can be sized to the full
+    * serving-RAM budget without efSearch inflation. Same determinism
+    * contract and shuffle shape as [[nswTopK]].
+    */
+  def hnswTopK(df: DataFrame, vecCol: String, idCol: String,
+      query: Array[Double], k: Int, nParts: Int = 4, m: Int = 8,
+      efConstruction: Int = 64, efSearch: Int = 64): DataFrame =
+    fusedTopK(HnswTier, df, vecCol, idCol, query, k, nParts, m, efConstruction,
+      efSearch, entryCount = 1)
+
+  /** [[hnswTopK]] for a TABLE of query vectors, under the same enforced
+    * `maxQueries` bound as [[nswTopKJoin]]. Output (qIdCol, idCol, hnsw_sim).
+    */
+  def hnswTopKJoin(df: DataFrame, vecCol: String, idCol: String,
+      queries: DataFrame, qVecCol: String, qIdCol: String, k: Int,
+      nParts: Int = 4, m: Int = 8, efConstruction: Int = 64,
+      efSearch: Int = 64, maxQueries: Int = 4096): DataFrame =
+    fusedTopKJoin(HnswTier, df, vecCol, idCol, queries, qVecCol, qIdCol, k,
+      nParts, m, efConstruction, efSearch, maxQueries, entryCount = 1)
+
+  /** Materialized HNSW — (id, vec, layer_nbrs) rows per shard, where
+    * `layer_nbrs(l)` is the node's layer-l neighbor ids and the array's
+    * length encodes its level + 1. Search with [[hnswSearchBuilt]] using
+    * the SAME `nParts`/`m` (levels re-derive from ids).
+    */
+  def hnswBuild(df: DataFrame, vecCol: String, idCol: String,
+      nParts: Int = 4, m: Int = 8, efConstruction: Int = 64): DataFrame =
+    buildFrame(HnswTier, df, vecCol, idCol, nParts, m, efConstruction)
+
+  /** Beam-search a persisted [[hnswBuild]] index: the entry (first node
+    * to reach the shard's top level) re-derives deterministically, so
+    * results are identical to the fused [[hnswTopK]] (equality law in
+    * ApproxOpsSpec). Tombstones never return but keep routing, upper
+    * layers included.
+    */
+  def hnswSearchBuilt(index: DataFrame, vecCol: String, idCol: String,
+      query: Array[Double], k: Int, nParts: Int = 4,
+      efSearch: Int = 64): DataFrame =
+    searchBuilt(HnswTier, index, vecCol, idCol, query, k, nParts, efSearch,
+      entryCount = 1)
+
+  /** Incremental maintenance for the hierarchical index, with
+    * [[nswInsertAgainst]]'s contract and equality guarantee: levels are
+    * id-derived and the entry only advances on a strictly higher level, so
+    * an append-only batch replays the build loop node for node and the
+    * result is IDENTICAL to `hnswBuild(old ∪ new)`. A mismatched `m` (the
+    * persisted levels disagree with the re-derived ones) fails loudly.
+    */
+  def hnswInsertAgainst(index: DataFrame, newRows: DataFrame, vecCol: String,
+      idCol: String, nParts: Int = 4, m: Int = 8,
+      efConstruction: Int = 64): DataFrame =
+    insertFlagged(HnswTier, index, newRows, vecCol, idCol, nParts, m, efConstruction)
+      .drop("nsw_changed")
+
+  /** Codes-only serving index from a [[hnswBuild]] result: (id, pq_code,
+    * layer_nbrs). Search with [[hnswSearchCoded]] and the same codebooks.
+    */
+  def hnswEncodeIndex(index: DataFrame, vecCol: String, idCol: String,
+      books: Array[Array[Array[Double]]]): DataFrame =
+    index.select(col(idCol), pqEncode(col(vecCol), books).as("pq_code"),
+      col(HnswTier.nbrCol))
+
+  /** Beam-search a codes-only [[hnswEncodeIndex]] shard set: the upper-layer
+    * descent and the layer-0 beam both score by ADC lookups, so full-size
+    * shards get codes-only storage and logarithmic search together.
+    * Output (idCol, hnsw_pq_sim).
+    */
+  def hnswSearchCoded(coded: DataFrame, idCol: String,
+      books: Array[Array[Array[Double]]], query: Array[Double], k: Int,
+      nParts: Int = 4, efSearch: Int = 64): DataFrame =
+    searchCoded(HnswTier, coded, idCol, books, query, k, nParts, efSearch,
+      entryCount = 1)
+
+  /** Takedown for the persisted GRAPH indexes (either tier) —
+    * HNSW-style tombstones: marks `ids` deleted in a built or codes-only
+    * frame (a plain column join on `idCol`). A tombstoned node is never
+    * RETURNED by the searches but is still traversed as a routing
+    * waypoint, so connectivity through deleted nodes is preserved —
+    * filtering rows would sever paths (and fails loudly at
+    * [[resolveNbrs]], by design). Marks compose: re-deleting ORs into an
+    * existing `nsw_deleted` column; never-indexed ids are a no-op.
     *
-    * Physical fold and re-add, stated honestly: a node cannot be
-    * atomically swapped out of a graph the way a posting or a code row
-    * can ([[graft.operators.Retrieval.replaceInStored]] /
-    * [[int8ReplaceInStored]]), so the physical removal — and any re-add
-    * of a previously deleted id ([[nswInsertAgainst]] refuses duplicate
-    * ids) — is the maintenance-cadence REBUILD: `nswBuild` over the
-    * retained rows (`index.where(!col("nsw_deleted"))`), exactly the
-    * compaction contract the segmented stores run on. The exact int8
-    * serving path carries takedowns/replaces atomically; the graph tier
-    * trades that for sub-linear search, which is the standard HNSW
-    * deployment trade. The PERSISTED form of this whole discipline is
-    * the stored tier ([[nswWriteIndex]] / [[nswDeleteFromStored]] /
-    * [[nswAppendToStored]] / [[nswCompactStored]]): there a takedown is
-    * one tiny mark-segment write behind an atomic flip, applied at
+    * A node cannot be atomically swapped out of a graph the way a posting
+    * or a code row can, so the physical removal — and any re-add of a
+    * deleted id ([[nswInsertAgainst]] refuses present ids) — is the
+    * maintenance-cadence REBUILD over the retained rows, the compaction
+    * contract the segmented stores run on. The persisted form is the
+    * stored tier ([[nswDeleteFromStored]] / [[nswCompactStored]]): a
+    * takedown is one tiny mark segment behind an atomic flip, applied at
     * [[readNswIndex]] load through this very function.
     */
   def nswDeleteFromBuilt(index: DataFrame, ids: DataFrame,
@@ -2535,11 +2815,8 @@ object Similarity {
   // mark, since nswInsertAgainst refuses ids still present in the graph
   // (waypoints included); re-adds go through compaction, which folds
   // marks physically and sweeps delta + mark segments into one payload.
-  // Invariant the append path maintains: tombstones persisted IN-COLUMN
-  // (an nswDeleteFromBuilt frame written via nswWriteIndex) are mirrored
-  // into a mark segment before the first delta commits, because a delta
-  // row replacing an in-column-marked base row carries no mark of its
-  // own. --------------------------------------------------------------
+  // The append path mirrors IN-COLUMN tombstones into a mark segment
+  // before its delta commits (see nswAppendToStored). ------------------
 
   /** Bootstrap / replace a stored graph index with a [[nswBuild]] (or
     * [[nswEncodeIndex]]) frame — everything previously committed,
@@ -2726,7 +3003,7 @@ object Similarity {
     }
 
   /** Insert NEW vectors into a stored RAW-VECTOR graph index
-    * ([[nswInsertDelta]] through the store): the segment persisted is
+    * (the [[nswInsertAgainst]] replay through the store): the segment persisted is
     * ONLY the rows the insert touched — the new nodes plus the existing
     * nodes it relinked, at most |batch|·(m+1) rows — committed as
     * `seg=N/graphdelta` on one atomic log flip (commitAppend). A daily
@@ -2745,8 +3022,8 @@ object Similarity {
     * resurrect the takedown. Deleted nodes keep routing as waypoints
     * through appends; re-adding a deleted id still requires a compaction
     * first (the insert refuses ids present in the graph).
-    */
-  /** @param batchId pass the foreachBatch micro-batch id to make the
+    *
+    * @param batchId pass the foreachBatch micro-batch id to make the
     *   append IDEMPOTENT under at-least-once replay (the
     *   [[graft.operators.Retrieval.appendToStored]] contract): the
     *   segment id becomes a pure function of the batch id and a
@@ -2758,9 +3035,9 @@ object Similarity {
       m: Int = 8, efConstruction: Int = 64,
       batchId: Option[Long] = None): Unit =
     appendToStoredGraph(spark, path, newRows, vecCol, idCol,
-      nbrCol = "nbr_ids", label = "nswAppendToStored", batchId,
-      insertDelta = (cur, fresh) =>
-        nswInsertDelta(cur, fresh, vecCol, idCol, nParts, m, efConstruction))
+      nbrCol = NswTier.nbrCol, label = "nswAppendToStored", batchId,
+      insertDelta = (cur, fresh) => insertDelta(NswTier, cur, fresh, vecCol,
+        idCol, nParts, m, efConstruction))
 
   /** The one delta-append body, shared by the flat ([[nswAppendToStored]])
     * and hierarchical ([[hnswAppendToStored]]) stored tiers — they differ
@@ -2872,13 +3149,6 @@ object Similarity {
       }
     }
 
-  /** Fold takedowns physically: REBUILD the graph over the retained rows
-    * (the maintenance-cadence compaction [[nswDeleteFromBuilt]]
-    * documents), sweep the mark segments, one atomic flip. After a
-    * compaction a previously-deleted id can re-enter via
-    * [[nswAppendToStored]]. Raw-vector indexes only (a rebuild needs the
-    * vectors).
-    */
   /** Self-scheduling fold for the stored graph tier — the
     * [[graft.operators.Retrieval.compactIfFragmented]] /
     * [[int8CompactIfFragmented]] cadence shape: compact only when more
@@ -2893,19 +3163,30 @@ object Similarity {
       idCol: String = "vec_id", nParts: Int = 4, m: Int = 8,
       efConstruction: Int = 64, maxSegments: Int = 8,
       sweepGraceMs: Long = 0L, compactOnWear: Boolean = false,
-      tombstoneWarn: Double = 0.2): Boolean = {
+      tombstoneWarn: Double = 0.2): Boolean =
+    compactGraphIfFragmented(NswTier, spark, path, vecCol, idCol, nParts, m,
+      efConstruction, maxSegments, sweepGraceMs, compactOnWear, tombstoneWarn)
+
+  /** The one cadence body of both stored graph tiers: the count-guarded
+    * fold, then the opt-in wear repair ([[compactIfWorn]]), then the
+    * best-effort health check.
+    */
+  private def compactGraphIfFragmented(tier: GraphTier, spark: SparkSession,
+      path: String, vecCol: String, idCol: String, nParts: Int, m: Int,
+      efConstruction: Int, maxSegments: Int, sweepGraceMs: Long,
+      compactOnWear: Boolean, tombstoneWarn: Double): Boolean = {
+    val label = s"${tier.name}CompactIfFragmented"
     def fold(): Unit =
       compactStoredGraphLocked(spark, path, vecCol, idCol,
-        nbrCol = "nbr_ids", label = "nswCompactStored", sweepGraceMs,
-        build = retained => nswBuild(retained, vecCol, idCol, nParts, m,
+        nbrCol = tier.nbrCol, label = s"${tier.name}CompactStored", sweepGraceMs,
+        build = retained => buildFrame(tier, retained, vecCol, idCol, nParts, m,
           efConstruction))
     val ran = graft.batch.SegmentedStore.compactIfFragmentedLocked(path, maxSegments) {
       fold()
     }
     val worn = !ran && compactOnWear &&
-      compactIfWorn(spark, path, idCol, tombstoneWarn,
-        "nswCompactIfFragmented")(fold())
-    graphHealthCadenceCheck(spark, path, idCol, "nswCompactIfFragmented")
+      compactIfWorn(spark, path, idCol, tombstoneWarn, label)(fold())
+    graphHealthCadenceCheck(spark, path, idCol, label)
     ran || worn
   }
 
@@ -3072,11 +3353,18 @@ object Similarity {
         "stats_exact", "health_warn")
   }
 
+  /** Fold takedowns physically: REBUILD the graph over the retained rows
+    * (the maintenance-cadence compaction [[nswDeleteFromBuilt]]
+    * documents), sweep the mark segments, one atomic flip. After a
+    * compaction a previously-deleted id can re-enter via
+    * [[nswAppendToStored]]. Raw-vector indexes only (a rebuild needs the
+    * vectors).
+    */
   def nswCompactStored(spark: SparkSession, path: String, vecCol: String,
       idCol: String = "vec_id", nParts: Int = 4, m: Int = 8,
       efConstruction: Int = 64, sweepGraceMs: Long = 0L): Unit =
     compactStoredGraph(spark, path, vecCol, idCol,
-      nbrCol = "nbr_ids", label = "nswCompactStored", sweepGraceMs,
+      nbrCol = NswTier.nbrCol, label = "nswCompactStored", sweepGraceMs,
       build = retained => nswBuild(retained, vecCol, idCol, nParts, m,
         efConstruction))
 
@@ -3120,49 +3408,37 @@ object Similarity {
 
   // ---- stored HIERARCHICAL graph tier (round 16): the hnswBuild
   // (id, vec, layer_nbrs) frame under the SAME segment machinery — the
-  // commit-log layout, mark fold, and delta LWW are schema-generic, so
-  // write/read/takedown are thin delegates; append and compaction replay
-  // the hierarchical insert/build instead of the flat one. Search with
-  // [[hnswSearchBuilt]]/[[hnswSearchCoded]], which gate `nsw_deleted`
-  // like the flat searches (tombstones never returned, still routing —
-  // including as upper-layer waypoints). ------------------------------
+  // commit-log layout, mark fold and delta LWW are schema-generic, so
+  // write/read/takedown delegate; append and compaction run the HNSW
+  // tier of the graph kernel. -----------------------------------------
 
-  /** Bootstrap / replace a stored hierarchical index with a [[hnswBuild]]
-    * (or [[hnswEncodeIndex]]) frame — one atomic flip, everything prior
-    * superseded (≡ [[nswWriteIndex]]: the segment layout is
-    * schema-generic).
-    */
+  /** [[nswWriteIndex]] for a [[hnswBuild]] / [[hnswEncodeIndex]] frame. */
   def hnswWriteIndex(index: DataFrame, path: String): Unit =
     nswWriteIndex(index, path)
 
-  /** Load a stored hierarchical index with deltas LWW-folded and every
-    * committed takedown applied (≡ [[readNswIndex]] — schema-generic).
-    */
+  /** [[readNswIndex]] for a stored hierarchical index. */
   def readHnswIndex(spark: SparkSession, path: String,
       idCol: String = "vec_id"): DataFrame = readNswIndex(spark, path, idCol)
 
-  /** Takedown on a stored hierarchical index: one tiny mark segment +
-    * one atomic flip (≡ [[nswDeleteFromStored]] — the mark machinery is
+  /** [[nswDeleteFromStored]] for a stored hierarchical index (marks are
     * id-keyed, not layout-aware).
     */
   def hnswDeleteFromStored(spark: SparkSession, path: String,
       ids: DataFrame, idCol: String = "vec_id"): Unit =
     nswDeleteFromStored(spark, path, ids, idCol)
 
-  /** Insert NEW vectors into a stored hierarchical index: ONE
-    * O(|batch|·m) `graphdelta` segment of the touched rows (new +
-    * relinked, via [[hnswInsertDelta]]), commitAppend — the
-    * [[nswAppendToStored]] contract on the multi-layer frame, in-column
-    * tombstone mirroring included.
+  /** The [[nswAppendToStored]] contract on the multi-layer frame: one
+    * O(|batch|·m) `graphdelta` segment of the rows the
+    * [[hnswInsertAgainst]] replay touched, in-column tombstones mirrored.
     */
   def hnswAppendToStored(spark: SparkSession, path: String,
       newRows: DataFrame, vecCol: String, idCol: String, nParts: Int = 4,
       m: Int = 8, efConstruction: Int = 64,
       batchId: Option[Long] = None): Unit =
     appendToStoredGraph(spark, path, newRows, vecCol, idCol,
-      nbrCol = "layer_nbrs", label = "hnswAppendToStored", batchId,
-      insertDelta = (cur, fresh) =>
-        hnswInsertDelta(cur, fresh, vecCol, idCol, nParts, m, efConstruction))
+      nbrCol = HnswTier.nbrCol, label = "hnswAppendToStored", batchId,
+      insertDelta = (cur, fresh) => insertDelta(HnswTier, cur, fresh, vecCol,
+        idCol, nParts, m, efConstruction))
 
   /** Fold takedowns + deltas physically: REBUILD the hierarchy over the
     * retained rows, sweep delta/mark segments, one atomic flip.
@@ -3172,598 +3448,16 @@ object Similarity {
       idCol: String = "vec_id", nParts: Int = 4, m: Int = 8,
       efConstruction: Int = 64, sweepGraceMs: Long = 0L): Unit =
     compactStoredGraph(spark, path, vecCol, idCol,
-      nbrCol = "layer_nbrs", label = "hnswCompactStored", sweepGraceMs,
+      nbrCol = HnswTier.nbrCol, label = "hnswCompactStored", sweepGraceMs,
       build = retained => hnswBuild(retained, vecCol, idCol, nParts, m,
         efConstruction))
 
-  /** Self-scheduling fold for the stored hierarchical tier (≡
-    * [[nswCompactIfFragmented]] — the same shared guard body,
-    * parameterized by this tier's rebuild).
-    */
+  /** [[nswCompactIfFragmented]] for the stored hierarchical tier. */
   def hnswCompactIfFragmented(spark: SparkSession, path: String, vecCol: String,
       idCol: String = "vec_id", nParts: Int = 4, m: Int = 8,
       efConstruction: Int = 64, maxSegments: Int = 8,
       sweepGraceMs: Long = 0L, compactOnWear: Boolean = false,
-      tombstoneWarn: Double = 0.2): Boolean = {
-    def fold(): Unit =
-      compactStoredGraphLocked(spark, path, vecCol, idCol,
-        nbrCol = "layer_nbrs", label = "hnswCompactStored", sweepGraceMs,
-        build = retained => hnswBuild(retained, vecCol, idCol, nParts, m,
-          efConstruction))
-    val ran = graft.batch.SegmentedStore.compactIfFragmentedLocked(path, maxSegments) {
-      fold()
-    }
-    val worn = !ran && compactOnWear &&
-      compactIfWorn(spark, path, idCol, tombstoneWarn,
-        "hnswCompactIfFragmented")(fold())
-    graphHealthCadenceCheck(spark, path, idCol, "hnswCompactIfFragmented")
-    ran || worn
-  }
-
-  /** Incremental index maintenance — insert a batch of NEW vectors into a
-    * persisted [[nswBuild]] index without rebuilding the shard graphs: the
-    * same daily-ingest contract as `Dedup.exactAgainst`. New rows hash into
-    * their shard (SAME `nParts`/`m`/`efConstruction` as the build —
-    * mismatched `nParts` fails loudly via [[resolveNbrs]]), and each shard
-    * replays [[nswBuildLocal]]'s insert loop over just the new nodes:
-    * beam-search the existing graph, link bidirectionally to the `m`
-    * nearest, prune overflowing neighbor lists back to 2m. One shuffle of
-    * (index rows + new rows); per-shard work is O(|new| · efConstruction ·
-    * degree), independent of how many shards the daily batch misses.
-    *
-    * When every new id exceeds every indexed id (the append-only ingest
-    * shape — ids are assigned monotonically), the result is BYTE-IDENTICAL
-    * to `nswBuild(old ∪ new)`: insertion order is ascending id in both, so
-    * the incremental path inherits the full-rebuild recall laws (equality
-    * law in ApproxOpsSpec, gate row q_ann_nsw_incr). Interleaved ids still
-    * produce a valid NSW graph, just not the rebuild-identical one.
-    *
-    * Pair with [[pqEncode]] against the STORED codebooks to extend a
-    * codes-only serving index ([[nswEncodeIndex]]) with the same rows —
-    * codebooks are frozen at training time, exactly like IVFADC serving.
-    */
-  def nswInsertAgainst(index: DataFrame, newRows: DataFrame, vecCol: String,
-      idCol: String, nParts: Int = 4, m: Int = 8,
-      efConstruction: Int = 64): DataFrame =
-    nswInsertFlagged(index, newRows, vecCol, idCol, nParts, m, efConstruction)
-      .drop("nsw_changed")
-
-  /** [[nswInsertAgainst]] restricted to the rows the insert TOUCHED: the
-    * new nodes plus every existing node whose adjacency list changed (a
-    * new node linked into it, possibly pruning it back to 2m). This is
-    * the O(|batch|·m) frame [[nswAppendToStored]] persists as a delta
-    * segment — each new node links to at most `m` nodes and pruning only
-    * mutates the linked node's own list, so the delta is at most
-    * |batch|·(m+1) rows regardless of index size. Same (id, vec,
-    * nbr_ids) schema as the full frame; read-side last-writer-wins per
-    * id reassembles the grown graph (law: NswStoredSpec).
-    */
-  def nswInsertDelta(index: DataFrame, newRows: DataFrame, vecCol: String,
-      idCol: String, nParts: Int = 4, m: Int = 8,
-      efConstruction: Int = 64): DataFrame =
-    nswInsertFlagged(index, newRows, vecCol, idCol, nParts, m, efConstruction)
-      .where(col("nsw_changed")).drop("nsw_changed")
-
-  /** The one insert-replay body: emits the whole grown graph with a
-    * `nsw_changed` flag — true for new nodes and for existing nodes whose
-    * final adjacency differs from the one they carried in.
-    */
-  private def nswInsertFlagged(index: DataFrame, newRows: DataFrame, vecCol: String,
-      idCol: String, nParts: Int, m: Int, efConstruction: Int): DataFrame = {
-    val session = index.sparkSession
-    import session.implicits._
-    val old = index.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"),
-      col("nbr_ids").cast("array<long>"))
-    val fresh = newRows.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"),
-      lit(null).cast("array<long>").as("nbr_ids"))
-    old.unionByName(fresh)
-      .as[(Long, Seq[Double], Seq[Long])]
-      .repartition(nParts, col(idCol))
-      .mapPartitions { it =>
-        val all = it.toArray.sortBy(_._1)
-        if (all.isEmpty) Iterator.empty
-        else {
-          val existing = all.filter(_._3 != null)
-          val added = all.filter(_._3 == null)
-          // locals 0..p-1 are the indexed rows in id order; the graph they
-          // carry references only ids in this set (resolveNbrs enforces it)
-          val rows = existing ++ added
-          val idx = existing.iterator.map(_._1).zipWithIndex.toMap
-          // NEW means new: a re-delivered batch (at-least-once ingest) would
-          // otherwise emit duplicate-id rows and a silently corrupted index
-          added.foreach { r =>
-            if (idx.contains(r._1)) throw new IllegalArgumentException(
-              s"nswInsertAgainst: id ${r._1} is already in the index — newRows must " +
-              "contain only unindexed ids (dedup the ingest batch against the index first)")
-          }
-          val vecs = rows.map(_._2.toArray)
-          val norms = vecs.map(v => math.sqrt(v.map(x => x * x).sum))
-          val adj = Array.fill(rows.length)(scala.collection.mutable.ArrayBuffer.empty[Int])
-          existing.indices.foreach { i => adj(i) = resolveNbrs(existing(i)._1, existing(i)._3, idx) }
-          var i = math.max(existing.length, 1) // node 0 of an all-new shard has no prefix
-          while (i < rows.length) {
-            nswInsertNode(vecs, norms, adj, i, m, efConstruction)
-            i += 1
-          }
-          rows.indices.iterator.map { j =>
-            val nbrs = adj(j).toArray.sorted.map(x => rows(x)._1)
-            // changed ⇔ new node (j past the existing prefix) or the final
-            // list differs from the carried one; both are canonical-sorted
-            // within a layout but compared order-free to stay layout-proof
-            val changed = j >= existing.length ||
-              !java.util.Arrays.equals(nbrs.sorted, existing(j)._3.toArray.sorted)
-            (rows(j)._1, rows(j)._2, nbrs, changed)
-          }
-        }
-      }
-      .toDF(idCol, vecCol, "nbr_ids", "nsw_changed")
-  }
-
-  // ---- hierarchical NSW: full HNSW per shard (Malkov-Yashunin TPAMI'20:
-  // exponentially-decaying layer assignment, greedy descent through the
-  // upper layers, beam at layer 0). The upper layers replace multi-entry
-  // seeding with the real long-range skip structure — search cost stays
-  // ~logarithmic in shard size instead of degrading as shards grow. ------
-
-  /** Deterministic HNSW level for a node id: the standard
-    * floor(-ln(u)·mL) draw with u derived from a splitmix64 hash of the id
-    * — stable across runs, shards, and physical layouts (no RNG state).
-    * Capped at 12 (a 10M-node shard at m=8 tops out around level 7).
-    */
-  private def hnswLevel(id: Long, mL: Double): Int = {
-    var z = id + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z = z ^ (z >>> 31)
-    val u = ((z >>> 11) + 0.5) / (1L << 53).toDouble // (0, 1)
-    math.min((-math.log(u) * mL).toInt, 12)
-  }
-
-  /** Build one in-memory HNSW over the shard (ascending-index insertion):
-    * each node enters at its [[hnswLevel]]; the insert greedy-descends
-    * from the current entry through layers above it, then beam-searches
-    * (`efConstruction`) and links `m` nearest per layer on the way down —
-    * neighbor caps 2m at layer 0, m above, simple prune, CANONICAL
-    * index-sorted buffers throughout (same determinism contract as
-    * [[nswBuildLocal]]). Returns (layers, levels, entry): `layers(l)(i)`
-    * is node i's layer-l adjacency; entry is the first node to reach the
-    * top level.
-    */
-  private def hnswBuildLocal(vecs: Array[Array[Double]], norms: Array[Double],
-      ids: Array[Long], m: Int, efConstruction: Int):
-      (Array[Array[scala.collection.mutable.ArrayBuffer[Int]]], Array[Int], Int) = {
-    val n = vecs.length
-    val levels = ids.map(hnswLevel(_, 1.0 / math.log(math.max(2, m))))
-    val maxLevel = levels.max
-    val layers = Array.fill(maxLevel + 1, n)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    var entry = 0
-    var top = levels(0)
-    var i = 1
-    while (i < n) {
-      val et = hnswInsertNode(vecs, norms, layers, levels, entry, top, i, m, efConstruction)
-      entry = et._1; top = et._2
-      i += 1
-    }
-    (layers, levels, entry)
-  }
-
-  /** One insert step of the HNSW construction loop (shared verbatim by
-    * [[hnswBuildLocal]] and [[hnswInsertAgainst]], the same contract as
-    * [[nswInsertNode]]): greedy-descend from the current entry through
-    * the layers above node `i`'s level, then beam + link `m` nearest per
-    * layer downward. Returns the (entry, top) after the insert.
-    */
-  private def hnswInsertNode(vecs: Array[Array[Double]], norms: Array[Double],
-      layers: Array[Array[scala.collection.mutable.ArrayBuffer[Int]]],
-      levels: Array[Int], entry: Int, top: Int, i: Int,
-      m: Int, efConstruction: Int): (Int, Int) = {
-    val li = levels(i)
-    var cur = entry
-    var lc = top
-    while (lc > li) { // greedy descent (ef = 1) through the upper layers
-      val best = nswSearchLocal(vecs, norms, layers(lc), Array(cur), vecs(i), 1, i)
-      cur = best.head._1
-      lc -= 1
-    }
-    var lcd = math.min(top, li)
-    while (lcd >= 0) {
-      val found = nswSearchLocal(vecs, norms, layers(lcd), Array(cur), vecs(i),
-        efConstruction, i)
-      cur = found.head._1
-      val cap = if (lcd == 0) 2 * m else m
-      val nbrs = found.take(m).map(_._1)
-      layers(lcd)(i) ++= nbrs.sorted
-      nbrs.foreach { nb =>
-        layers(lcd)(nb) += i // i exceeds every member: stays sorted
-        if (layers(lcd)(nb).length > cap) {
-          val qNorm = norms(nb)
-          val kept = layers(lcd)(nb).toArray
-            .map(x => (x, simTo(vecs, norms, x, vecs(nb), qNorm)))
-            .sortBy { case (x, s) => (-s, x) }
-            .take(cap).map(_._1)
-          layers(lcd)(nb).clear(); layers(lcd)(nb) ++= kept.sorted
-        }
-      }
-      lcd -= 1
-    }
-    if (li > top) (i, li) else (entry, top)
-  }
-
-  /** Search one in-memory HNSW: greedy descent entry → layer 1, then a
-    * single `ef` beam at layer 0. Deterministic (canonical neighbor
-    * order, smaller-index tie rule).
-    */
-  private def hnswSearchLocal(vecs: Array[Array[Double]], norms: Array[Double],
-      layers: Array[Array[scala.collection.mutable.ArrayBuffer[Int]]],
-      levels: Array[Int], entry: Int, q: Array[Double], ef: Int,
-      emit: Int => Boolean = _ => true): Array[(Int, Double)] = {
-    val qNorm = math.sqrt(q.map(x => x * x).sum)
-    hnswSearchLocalBy(i => simTo(vecs, norms, i, q, qNorm), layers, levels,
-      entry, ef, emit)
-  }
-
-  /** [[hnswSearchLocal]] generalized over the node-scoring function —
-    * true cosine for raw-vector shards, ADC lookups for codes-only shards
-    * (the same split as [[nswSearchLocalBy]]).
-    */
-  private def hnswSearchLocalBy(score: Int => Double,
-      layers: Array[Array[scala.collection.mutable.ArrayBuffer[Int]]],
-      levels: Array[Int], entry: Int, ef: Int,
-      emit: Int => Boolean = _ => true): Array[(Int, Double)] = {
-    val n = layers(0).length
-    var cur = entry
-    var lc = levels(entry)
-    while (lc > 0) {
-      // upper-layer descent routes through EVERY node — tombstoned nodes
-      // keep their waypoint role (the nswSearchBuilt contract); the emit
-      // gate applies only to what the layer-0 beam RETURNS
-      val best = nswSearchLocalBy(score, layers(lc), Array(cur), 1, n)
-      cur = best.head._1
-      lc -= 1
-    }
-    nswSearchLocalBy(score, layers(0), Array(cur), ef, n, emit)
-  }
-
-  /** Partitioned hierarchical NSW (full HNSW per hash shard) — the
-    * large-shard serving layout: where the layer-0-only [[nswTopK]] leans
-    * on multi-entry seeding to hold recall as shards grow, the upper
-    * layers give the real logarithmic skip structure, so one shard can be
-    * sized to the full ~10M-vector serving-RAM budget without efSearch
-    * inflation. Same determinism contract as the NSW family (id-order
-    * insertion, id-hash levels, canonical neighbor order, smaller-id
-    * ties); same shuffle shape (one repartition by id, embarrassingly
-    * parallel builds, TakeOrdered merge).
-    */
-  def hnswTopK(df: DataFrame, vecCol: String, idCol: String,
-      query: Array[Double], k: Int, nParts: Int = 4, m: Int = 8,
-      efConstruction: Int = 64, efSearch: Int = 64): DataFrame = {
-    val session = df.sparkSession
-    import session.implicits._
-    val q = query
-    val kk = k
-    df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Seq[Double])]
-      .repartition(nParts, col(idCol))
-      .mapPartitions { it =>
-        val rows = it.toArray.sortBy(_._1)
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val vecs = rows.map(_._2.toArray)
-          val norms = vecs.map(v => math.sqrt(v.map(x => x * x).sum))
-          val (layers, levels, entry) =
-            hnswBuildLocal(vecs, norms, rows.map(_._1), m, efConstruction)
-          hnswSearchLocal(vecs, norms, layers, levels, entry, q, math.max(efSearch, kk))
-            .take(kk).iterator.map { case (i, s) => (rows(i)._1, s) }
-        }
-      }
-      .toDF(idCol, "__s")
-      .select(col(idCol), round(col("__s"), 6).as("hnsw_sim"))
-      .orderBy(col("hnsw_sim").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** Materialized HNSW — (id, vec, layer_nbrs) rows per shard, where
-    * `layer_nbrs(l)` is the node's layer-l neighbor ids and the array's
-    * length encodes its level + 1 (levels are id-derived, so the encoding
-    * is redundant but self-describing). Search with [[hnswSearchBuilt]]
-    * using the SAME `nParts`/`m` (levels re-derive from ids; a mismatched
-    * `nParts` fails loudly via [[resolveNbrs]]).
-    */
-  def hnswBuild(df: DataFrame, vecCol: String, idCol: String,
-      nParts: Int = 4, m: Int = 8, efConstruction: Int = 64): DataFrame = {
-    val session = df.sparkSession
-    import session.implicits._
-    df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Seq[Double])]
-      .repartition(nParts, col(idCol))
-      .mapPartitions { it =>
-        val rows = it.toArray.sortBy(_._1)
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val vecs = rows.map(_._2.toArray)
-          val norms = vecs.map(v => math.sqrt(v.map(x => x * x).sum))
-          val (layers, levels, _) =
-            hnswBuildLocal(vecs, norms, rows.map(_._1), m, efConstruction)
-          rows.indices.iterator.map { i =>
-            val perLayer: Seq[Seq[Long]] = (0 to levels(i)).map(l =>
-              layers(l)(i).toSeq.map(x => rows(x)._1))
-            (rows(i)._1, rows(i)._2, perLayer)
-          }
-        }
-      }
-      .toDF(idCol, vecCol, "layer_nbrs")
-  }
-
-  /** Beam-search a persisted [[hnswBuild]] index: same `nParts` restores
-    * each shard's graphs; the entry (first node to reach the shard's top
-    * level — the smallest id there, since levels are id-derived and the
-    * build updates the entry only on a strictly higher level) re-derives
-    * deterministically, so results are identical to the fused
-    * [[hnswTopK]] (equality law in ApproxOpsSpec).
-    */
-  def hnswSearchBuilt(index: DataFrame, vecCol: String, idCol: String,
-      query: Array[Double], k: Int, nParts: Int = 4,
-      efSearch: Int = 64): DataFrame = {
-    val session = index.sparkSession
-    import session.implicits._
-    val q = query
-    val kk = k
-    // tombstones gate RESULTS, never routing — the nswSearchBuilt contract,
-    // extended to the hierarchical tier (round 16's stored HNSW)
-    val delCol = (if (index.columns.contains("nsw_deleted")) col("nsw_deleted")
-      else lit(false)).cast("boolean").as("__del")
-    index.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"),
-        col("layer_nbrs").cast("array<array<long>>"), delCol)
-      .as[(Long, Seq[Double], Seq[Seq[Long]], Boolean)]
-      .repartition(nParts, col(idCol))
-      .mapPartitions { it =>
-        val rows = it.toArray.sortBy(_._1)
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val idx = rows.iterator.map(_._1).zipWithIndex.toMap
-          val vecs = rows.map(_._2.toArray)
-          val norms = vecs.map(v => math.sqrt(v.map(x => x * x).sum))
-          val levels = rows.map(_._3.length - 1)
-          val maxLevel = levels.max
-          val layers = Array.tabulate(maxLevel + 1, rows.length) { (l, i) =>
-            if (l <= levels(i)) resolveNbrs(rows(i)._1, rows(i)._3(l), idx)
-            else scala.collection.mutable.ArrayBuffer.empty[Int]
-          }
-          val entry = levels.indexOf(maxLevel) // smallest id at the top level
-          val alive = rows.map(r => !r._4)
-          hnswSearchLocal(vecs, norms, layers, levels, entry, q,
-              math.max(efSearch, kk), i => alive(i))
-            .take(kk).iterator.map { case (i, s) => (rows(i)._1, s) }
-        }
-      }
-      .toDF(idCol, "__s")
-      .select(col(idCol), round(col("__s"), 6).as("hnsw_sim"))
-      .orderBy(col("hnsw_sim").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** Incremental maintenance for the hierarchical index — the HNSW
-    * counterpart of [[nswInsertAgainst]], same daily-ingest contract and
-    * the same equality guarantee: levels are id-derived and the entry
-    * point only advances on a strictly higher level, so an append-only
-    * batch (new ids above every indexed id) replays [[hnswBuildLocal]]'s
-    * loop node for node and the result is IDENTICAL to
-    * `hnswBuild(old ∪ new)`. SAME `nParts`/`m`/`efConstruction` as the
-    * build (levels depend on m; a mismatched `nParts` fails loudly via
-    * [[resolveNbrs]]).
-    */
-  def hnswInsertAgainst(index: DataFrame, newRows: DataFrame, vecCol: String,
-      idCol: String, nParts: Int = 4, m: Int = 8,
-      efConstruction: Int = 64): DataFrame =
-    hnswInsertFlagged(index, newRows, vecCol, idCol, nParts, m, efConstruction)
-      .drop("nsw_changed")
-
-  /** [[hnswInsertAgainst]] restricted to the rows the insert TOUCHED —
-    * the hierarchical counterpart of [[nswInsertDelta]], persisted by
-    * [[hnswAppendToStored]] as an O(|batch|) delta segment. Each new
-    * node links ≤ m nodes per layer over its (geometrically distributed,
-    * ≤ 13) levels, and pruning only mutates the linked node's own list,
-    * so the delta is O(|batch|·m) rows in expectation regardless of
-    * index size.
-    */
-  def hnswInsertDelta(index: DataFrame, newRows: DataFrame, vecCol: String,
-      idCol: String, nParts: Int = 4, m: Int = 8,
-      efConstruction: Int = 64): DataFrame =
-    hnswInsertFlagged(index, newRows, vecCol, idCol, nParts, m, efConstruction)
-      .where(col("nsw_changed")).drop("nsw_changed")
-
-  private def hnswInsertFlagged(index: DataFrame, newRows: DataFrame, vecCol: String,
-      idCol: String, nParts: Int, m: Int, efConstruction: Int): DataFrame = {
-    val session = index.sparkSession
-    import session.implicits._
-    val old = index.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"),
-      col("layer_nbrs").cast("array<array<long>>"))
-    val fresh = newRows.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"),
-      lit(null).cast("array<array<long>>").as("layer_nbrs"))
-    old.unionByName(fresh)
-      .as[(Long, Seq[Double], Seq[Seq[Long]])]
-      .repartition(nParts, col(idCol))
-      .mapPartitions { it =>
-        val all = it.toArray.sortBy(_._1)
-        if (all.isEmpty) Iterator.empty
-        else {
-          val existing = all.filter(_._3 != null)
-          val added = all.filter(_._3 == null)
-          val rows = existing ++ added
-          val idx = existing.iterator.map(_._1).zipWithIndex.toMap
-          added.foreach { r =>
-            if (idx.contains(r._1)) throw new IllegalArgumentException(
-              s"hnswInsertAgainst: id ${r._1} is already in the index — newRows must " +
-              "contain only unindexed ids (dedup the ingest batch against the index first)")
-          }
-          val vecs = rows.map(_._2.toArray)
-          val norms = vecs.map(v => math.sqrt(v.map(x => x * x).sum))
-          val levels = rows.map(r => hnswLevel(r._1, 1.0 / math.log(math.max(2, m))))
-          // levels depend on m: a persisted level that disagrees with the
-          // re-derived one means this call's m differs from the build's —
-          // silently restructuring (or crashing mid-write) is the same
-          // contract-breach class as a mismatched nParts, so fail loudly
-          existing.indices.foreach { i =>
-            if (existing(i)._3.length - 1 != levels(i)) throw new IllegalArgumentException(
-              s"hnswInsertAgainst: node ${existing(i)._1} was built at level " +
-              s"${existing(i)._3.length - 1} but m=$m derives level ${levels(i)} — " +
-              "the insert must use the SAME m as the original hnswBuild")
-          }
-          val maxLevel = levels.max
-          val layers = Array.fill(maxLevel + 1, rows.length)(
-            scala.collection.mutable.ArrayBuffer.empty[Int])
-          existing.indices.foreach { i =>
-            existing(i)._3.indices.foreach { l =>
-              layers(l)(i) = resolveNbrs(existing(i)._1, existing(i)._3(l), idx)
-            }
-          }
-          var (entry, top) =
-            if (existing.isEmpty) (0, levels(0))
-            else {
-              val exTop = existing.indices.iterator.map(levels(_)).max
-              (existing.indices.find(levels(_) == exTop).get, exTop)
-            }
-          var i = math.max(existing.length, 1)
-          while (i < rows.length) {
-            val et = hnswInsertNode(vecs, norms, layers, levels, entry, top, i,
-              m, efConstruction)
-            entry = et._1; top = et._2
-            i += 1
-          }
-          rows.indices.iterator.map { j =>
-            val perLayer: Seq[Seq[Long]] = (0 to levels(j)).map(l =>
-              layers(l)(j).toSeq.map(x => rows(x)._1))
-            // changed ⇔ new node or ANY layer's final list differs from the
-            // carried one (order-free per layer, layout-proof — same rule
-            // as nswInsertFlagged)
-            val changed = j >= existing.length || {
-              val orig = existing(j)._3
-              perLayer.length != orig.length ||
-                perLayer.indices.exists(l =>
-                  !java.util.Arrays.equals(perLayer(l).toArray.sorted,
-                    orig(l).toArray.sorted))
-            }
-            (rows(j)._1, rows(j)._2, perLayer, changed)
-          }
-        }
-      }
-      .toDF(idCol, vecCol, "layer_nbrs", "nsw_changed")
-  }
-
-  /** Codes-only serving index from a [[hnswBuild]] result — the
-    * hierarchical counterpart of [[nswEncodeIndex]]: the vector column is
-    * REPLACED by its PQ code, keeping (id, pq_code, layer_nbrs). The
-    * graphs were built on true distances; the stored index carries none.
-    * Search with [[hnswSearchCoded]] and the same codebooks.
-    */
-  def hnswEncodeIndex(index: DataFrame, vecCol: String, idCol: String,
-      books: Array[Array[Array[Double]]]): DataFrame =
-    index.select(col(idCol), pqEncode(col(vecCol), books).as("pq_code"),
-      col("layer_nbrs"))
-
-  /** Beam-search a codes-only [[hnswEncodeIndex]] shard set: the greedy
-    * upper-layer descent AND the layer-0 beam both score by ADC lookups
-    * (query-side tables computed once on the driver, one m-entry sum per
-    * visited node) — the hierarchical skip structure works unchanged over
-    * quantized scores, so full-size shards get codes-only storage AND
-    * logarithmic search together.
-    */
-  def hnswSearchCoded(coded: DataFrame, idCol: String,
-      books: Array[Array[Array[Double]]], query: Array[Double], k: Int,
-      nParts: Int = 4, efSearch: Int = 64): DataFrame = {
-    val session = coded.sparkSession
-    import session.implicits._
-    val kk = k
-    val subDim = books.head.head.length
-    val dotTab = books.zipWithIndex.map { case (cents, sub) =>
-      cents.map(cent => (0 until subDim).map(i => query(sub * subDim + i) * cent(i)).sum)
-    }
-    val nrmTab = books.map(_.map(cent => cent.map(x => x * x).sum))
-    val qNorm = math.sqrt(query.map(x => x * x).sum)
-    val delCol = (if (coded.columns.contains("nsw_deleted")) col("nsw_deleted")
-      else lit(false)).cast("boolean").as("__del")
-    coded.select(col(idCol).cast("long"), col("pq_code").cast("array<int>"),
-        col("layer_nbrs").cast("array<array<long>>"), delCol)
-      .as[(Long, Seq[Int], Seq[Seq[Long]], Boolean)]
-      .repartition(nParts, col(idCol))
-      .mapPartitions { it =>
-        val rows = it.toArray.sortBy(_._1)
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val idx = rows.iterator.map(_._1).zipWithIndex.toMap
-          val codes = rows.map(_._2.toArray)
-          val levels = rows.map(_._3.length - 1)
-          val maxLevel = levels.max
-          val layers = Array.tabulate(maxLevel + 1, rows.length) { (l, i) =>
-            if (l <= levels(i)) resolveNbrs(rows(i)._1, rows(i)._3(l), idx)
-            else scala.collection.mutable.ArrayBuffer.empty[Int]
-          }
-          val entry = levels.indexOf(maxLevel)
-          val alive = rows.map(r => !r._4)
-          def adcScore(i: Int): Double = {
-            val code = codes(i)
-            var d = 0.0; var n2 = 0.0
-            var sub = 0
-            while (sub < code.length) {
-              d += dotTab(sub)(code(sub)); n2 += nrmTab(sub)(code(sub))
-              sub += 1
-            }
-            val denom = qNorm * math.sqrt(n2)
-            if (denom > 1e-12) d / denom else 0.0
-          }
-          hnswSearchLocalBy(adcScore, layers, levels, entry,
-              math.max(efSearch, kk), i => alive(i))
-            .take(kk).iterator.map { case (i, s) => (rows(i)._1, s) }
-        }
-      }
-      .toDF(idCol, "__s")
-      .select(col(idCol), round(col("__s"), 6).as("hnsw_pq_sim"))
-      .orderBy(col("hnsw_pq_sim").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** [[hnswTopK]] for a TABLE of query vectors — the hierarchical
-    * counterpart of [[nswTopKJoin]]: queries collect to the driver under
-    * the same enforced `maxQueries` bound, every shard builds once and
-    * searches each query through its hierarchy, per-query shard results
-    * merge by a window rank. Output (qIdCol, idCol, hnsw_sim).
-    */
-  def hnswTopKJoin(df: DataFrame, vecCol: String, idCol: String,
-      queries: DataFrame, qVecCol: String, qIdCol: String, k: Int,
-      nParts: Int = 4, m: Int = 8, efConstruction: Int = 64,
-      efSearch: Int = 64, maxQueries: Int = 4096): DataFrame = {
-    val session = df.sparkSession
-    import session.implicits._
-    val kk = k
-    val qs: Array[(Long, Array[Double])] = queries
-      .select(col(qIdCol).cast("long"), col(qVecCol).cast("array<double>"))
-      .as[(Long, Seq[Double])]
-      .limit(maxQueries + 1).collect().map { case (i, v) => (i, v.toArray) }
-    require(qs.length <= maxQueries,
-      s"hnswTopKJoin query table exceeds maxQueries=$maxQueries — " +
-        "batch the queries or raise the bound consciously")
-    val perShard = df
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Seq[Double])]
-      .repartition(nParts, col(idCol))
-      .mapPartitions { it =>
-        val rows = it.toArray.sortBy(_._1)
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val vecs = rows.map(_._2.toArray)
-          val norms = vecs.map(v => math.sqrt(v.map(x => x * x).sum))
-          val (layers, levels, entry) =
-            hnswBuildLocal(vecs, norms, rows.map(_._1), m, efConstruction)
-          qs.iterator.flatMap { case (qid, q) =>
-            hnswSearchLocal(vecs, norms, layers, levels, entry, q, math.max(efSearch, kk))
-              .take(kk).iterator.map { case (i, s) => (qid, rows(i)._1, s) }
-          }
-        }
-      }
-      .toDF(qIdCol, idCol, "__s")
-    val w = Window.partitionBy(col(qIdCol)).orderBy(col("__s").desc, col(idCol))
-    perShard.withColumn("__rank", row_number().over(w))
-      .where(col("__rank") <= k)
-      .select(col(qIdCol), col(idCol), round(col("__s"), 6).as("hnsw_sim"))
-  }
+      tombstoneWarn: Double = 0.2): Boolean =
+    compactGraphIfFragmented(HnswTier, spark, path, vecCol, idCol, nParts, m,
+      efConstruction, maxSegments, sweepGraceMs, compactOnWear, tombstoneWarn)
 }

@@ -417,6 +417,32 @@ class ApproxOpsSpec extends AnyFunSuite {
     assert(msgs(e2).exists(_.contains("SAME m")), msgs(e2))
   }
 
+  test("graph and PQ searches refuse a query whose dimension differs from the data's") {
+    val s = spark; import s.implicits._
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    val df = vecs.toDF("vec_id", "embedding")
+    val idx = Similarity.nswBuild(df, "embedding", "vec_id",
+      nParts = 4, m = 4, efConstruction = 32).localCheckpoint(true)
+    val books = Similarity.pqCodebooks(df, "embedding", "vec_id", dim, m = 4, c = 8)
+    // a short query used to throw ArrayIndexOutOfBounds; a long one was
+    // silently mis-scored (its extra components counted in the norm only)
+    Seq(dim - 1, dim + 3).foreach { d =>
+      val q = Array.tabulate(d)(i => math.cos(i + 1.0))
+      val e1 = intercept[Exception] {
+        Similarity.nswSearchBuilt(idx, "embedding", "vec_id", q, k = 5,
+          nParts = 4).collect()
+      }
+      assert(msgs(e1).exists(_.contains(s"query has $d dimensions")), msgs(e1))
+      val e2 = intercept[IllegalArgumentException] {
+        Similarity.pqTopKEncoded(df.select(col("vec_id"),
+            Similarity.pqEncode(col("embedding"), books).as("__code")),
+          "__code", "vec_id", books, q, k = 5).collect()
+      }
+      assert(e2.getMessage.contains(s"query has $d dimensions"), e2.getMessage)
+    }
+  }
+
   test("LSH ANN finds the planted near-duplicates; recall vs brute >= 0.6") {
     val s = spark; import s.implicits._
     val df = vecs.toDF("vec_id", "embedding")
