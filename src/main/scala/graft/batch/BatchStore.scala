@@ -105,8 +105,19 @@ final class BatchStore[K, V](
     val st = state
     st.lastCommitted(beforeOrAt).map { b =>
       val dir = snapshotDirAt(b, st.genOf(b.id))
-      (b, dir, spark.read.parquet(dir))
+      (b, dir, readSnapshotDir(spark, dir))
     }
+  }
+
+  /** A snapshot dir as a DataFrame, read with the `(key: K, value: V)`
+    * schema the encoders define — the shape [[writeSnapshotData]] writes —
+    * so no read launches a schema-inference job (footer reads); partition
+    * discovery still appends `kb` on a clustered store.
+    */
+  private def readSnapshotDir(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
+    val Array(k, v) = kvEnc.schema.fields
+    spark.read.schema(org.apache.spark.sql.types.StructType(
+      Seq(k.copy(name = "key"), v.copy(name = "value")))).parquet(dir)
   }
 
   def readLast(spark: SparkSession, beforeOrAt: BatchID = BatchID(Long.MaxValue)): Option[(BatchID, Dataset[(K, V)])] =
@@ -312,7 +323,7 @@ final class BatchStore[K, V](
           if (cumulativeSnapshots) List(st.committed.max)
           else st.committed.sorted.reverse
         val anyMatch = probeIds.exists { id =>
-          spark.read.parquet(snapshotDirAt(BatchID(id), st.genOf(id)))
+          readSnapshotDir(spark, snapshotDirAt(BatchID(id), st.genOf(id)))
             .join(keyDf, Seq("key"), "left_semi").limit(1).count() > 0
         }
         val bumped =
@@ -320,7 +331,7 @@ final class BatchStore[K, V](
           else st.committed.map { id =>
             val gen = st.genOf(id)
             val cur = antiJoinKeys(
-              spark.read.parquet(snapshotDirAt(BatchID(id), gen)), keyDf)
+              readSnapshotDir(spark, snapshotDirAt(BatchID(id), gen)), keyDf)
               .select(functions.col("key").as("_1"),
                 functions.col("value").as("_2")).as[(K, V)]
             writeSnapshotData(snapshotDirAt(BatchID(id), gen + 1), cur)

@@ -17,8 +17,10 @@ import graft.time.BatchID
   * 70-75) is preserved: online deltas at or below the snapshot batch are
   * EXCLUDED so no event is double-counted.
   *
-  * Executed as one union + one aggregation — a single shuffle on K; with a
-  * broadcast-size snapshot Catalyst will collapse it further.
+  * [[merged]] (the bulk Dataset read) runs as one union + one aggregation
+  * — a single shuffle on K; with a broadcast-size snapshot Catalyst will
+  * collapse it further. The key-set reads [[get]]/[[getBatch]] run one
+  * shuffle-free job and fold on the driver.
   */
 object ClientStore {
 
@@ -86,14 +88,9 @@ object ClientStore {
   }
 
   /** Point lookup for a single key — the reference's `get` (serving path,
-    * a storehaus point-read in the reference: ClientStore.scala:123-173).
-    * The offline side goes through `BatchStore.readLastForKey`: on a
-    * key-clustered store the bucket predicate statically prunes the scan
-    * to ONE `kb=` directory and the sorted layout confines parquet
-    * decoding to ~1 row group — matching the reference's point-read
-    * intent, not just its result. The online filter is pushed onto the
-    * delta scan the same way, so only the single key's snapshot row +
-    * deltas are shuffled/collected — never the full store.
+    * a storehaus point-read in the reference: ClientStore.scala:123-173):
+    * the one-key [[getBatch]], so a get is the same single pruned,
+    * shuffle-free job.
     */
   def get[K, V](
       spark: SparkSession,
@@ -101,37 +98,19 @@ object ClientStore {
       onlineDeltas: Dataset[(K, Long, V)],
       key: K,
       upTo: BatchID = BatchID(Long.MaxValue))(
-      implicit sg: Semigroup[V], kEnc: Encoder[K], vEnc: Encoder[V]): Option[V] = {
-    implicit val kvEnc: Encoder[(K, V)] = Encoders.tuple(kEnc, vEnc)
-    // COLUMN filter when the key type has a literal form (pushes to the
-    // parquet scan); typed-closure fallback for exotic key types
-    import org.apache.spark.sql.functions.lit
-    val keyLit = scala.util.Try(lit(key)).toOption
-    // positional column refs: typed Datasets keep their source column names
-    def filterKey[R](ds: Dataset[R], byClosure: R => Boolean): Dataset[R] =
-      keyLit.fold(ds.filter(byClosure))(l => ds.where(ds(ds.columns(0)) === l))
-    val (offBatch, snapshotK) = offline.readLastForKey(spark, key, upTo) match {
-      case Some((b, snap)) => (b.id, snap)
-      case None            => (Long.MinValue, spark.emptyDataset[(K, V)])
-    }
-    val onlineFiltered = filterKey[(K, Long, V)](onlineDeltas, _._1 == key)
-    val batchCol = onlineFiltered(onlineFiltered.columns(1))
-    implicit val taggedEnc: Encoder[(Long, K, V)] =
-      Encoders.tuple(Encoders.scalaLong, kEnc, vEnc)
-    val snapTagged = snapshotK.map(r => (Long.MinValue, r._1, r._2))
-    val onlineTagged = onlineFiltered
-      .where(batchCol > offBatch && batchCol <= upTo.id)
-      .map(r => (r._2, r._1, r._3))
-    mergeTagged(snapTagged.union(onlineTagged)).collect().headOption.map(_._2)
-  }
+      implicit sg: Semigroup[V], kEnc: Encoder[K], vEnc: Encoder[V]): Option[V] =
+    getBatch(spark, offline, onlineDeltas, Seq(key), upTo).get(key)
 
   /** Multi-key lookup — the reference's serving shape is storehaus
-    * `multiGet` (a request fetches a key SET, ClientStore.scala:123-173):
-    * ONE pruned job serves every key instead of a job per key. The
-    * offline side goes through `BatchStore.readLastForKeys` (clustered
-    * stores prune to the union of the keys' bucket dirs); the online
-    * filter pushes a `key IN (...)` onto the delta scan. Missing keys are
-    * simply absent from the returned map.
+    * `multiGet` (a request fetches a key SET, ClientStore.scala:123-173).
+    * ONE Spark job, no shuffle: it collects the tagged union of the pruned
+    * snapshot rows ([[servedFrame]]) and folds per key on the driver in tag
+    * order — snapshot first, then online batches in order — so the result
+    * is the offline-then-online merge for every semigroup, commutative or
+    * not. The driver holds what the API returns anyway: per requested key,
+    * one snapshot row plus its deltas in (b_off, upTo]. Missing keys are
+    * simply absent from the returned map; an empty key set touches no
+    * Spark at all.
     */
   def getBatch[K, V](
       spark: SparkSession,
@@ -139,25 +118,48 @@ object ClientStore {
       onlineDeltas: Dataset[(K, Long, V)],
       keys: Seq[K],
       upTo: BatchID = BatchID(Long.MaxValue))(
-      implicit sg: Semigroup[V], kEnc: Encoder[K], vEnc: Encoder[V]): Map[K, V] = {
+      implicit sg: Semigroup[V], kEnc: Encoder[K], vEnc: Encoder[V]): Map[K, V] =
+    if (keys.isEmpty) Map.empty
+    else servedFrame(spark, offline, onlineDeltas, keys, upTo).collect()
+      .sortBy(_._1) // stable: same-batch deltas keep their scan order
+      .foldLeft(Map.empty[K, V]) { case (acc, (_, k, v)) =>
+        acc.updated(k, acc.get(k).fold(v)(sg.plus(_, v)))
+      }
+
+  /** The (tag, K, V) rows [[getBatch]] folds, before any merge: the
+    * snapshot rows of `keys` (tag Long.MinValue) through
+    * `BatchStore.readLastForKeys` — a clustered store prunes to the union
+    * of the keys' bucket dirs — plus the online deltas of `keys` in
+    * (b_off, upTo], tagged with their batch, with `key IN (...)` pushed
+    * onto the delta scan. A union of two pruned scans: no exchange.
+    */
+  private[graft] def servedFrame[K, V](
+      spark: SparkSession,
+      offline: BatchStore[K, V],
+      onlineDeltas: Dataset[(K, Long, V)],
+      keys: Seq[K],
+      upTo: BatchID)(
+      implicit kEnc: Encoder[K], vEnc: Encoder[V]): Dataset[(Long, K, V)] = {
     implicit val kvEnc: Encoder[(K, V)] = Encoders.tuple(kEnc, vEnc)
+    implicit val taggedEnc: Encoder[(Long, K, V)] =
+      Encoders.tuple(Encoders.scalaLong, kEnc, vEnc)
+    // COLUMN filter when the key type has a literal form (pushes to the
+    // delta scan); typed-closure fallback for exotic key types
     import org.apache.spark.sql.functions.lit
     val keyLits = scala.util.Try(keys.map(lit)).toOption
     val keySet = keys.toSet
-    def filterKeys[R](ds: Dataset[R], byClosure: R => Boolean): Dataset[R] =
-      keyLits.fold(ds.filter(byClosure))(ls => ds.where(ds(ds.columns(0)).isin(ls: _*)))
     val (offBatch, snapshotK) = offline.readLastForKeys(spark, keys, upTo) match {
       case Some((b, snap)) => (b.id, snap)
       case None            => (Long.MinValue, spark.emptyDataset[(K, V)])
     }
-    val onlineFiltered = filterKeys[(K, Long, V)](onlineDeltas, r => keySet(r._1))
+    // positional column refs: typed Datasets keep their source column names
+    val onlineFiltered = keyLits.fold(onlineDeltas.filter(r => keySet(r._1)))(ls =>
+      onlineDeltas.where(onlineDeltas(onlineDeltas.columns(0)).isin(ls: _*)))
     val batchCol = onlineFiltered(onlineFiltered.columns(1))
-    implicit val taggedEnc: Encoder[(Long, K, V)] =
-      Encoders.tuple(Encoders.scalaLong, kEnc, vEnc)
     val snapTagged = snapshotK.map(r => (Long.MinValue, r._1, r._2))
     val onlineTagged = onlineFiltered
       .where(batchCol > offBatch && batchCol <= upTo.id)
       .map(r => (r._2, r._1, r._3))
-    mergeTagged(snapTagged.union(onlineTagged)).collect().toMap
+    snapTagged.union(onlineTagged)
   }
 }

@@ -811,11 +811,10 @@ private[graft] object CoreGate {
         if (victims.nonEmpty) store.deleteKeys(s, victims.toSeq)
         // end-to-end serving check: a revoked key point-reads as None
         // (no online deltas — the store is the only source)
-        require(victims.isEmpty || withPinnedShufflePartitions(s, 4) {
-          graft.client.ClientStore.get(s, store,
-            s.emptyDataset[(Long, Long, Long)], victims.head)(
-            Semigroup.longSemigroup, implicitly, implicitly).isEmpty
-        }, "q_store_delete: ClientStore.get served a revoked key")
+        require(victims.isEmpty || graft.client.ClientStore.get(s, store,
+          s.emptyDataset[(Long, Long, Long)], victims.head)(
+          Semigroup.longSemigroup, implicitly, implicitly).isEmpty,
+          "q_store_delete: ClientStore.get served a revoked key")
         store.readLast(s).get._2.toDF("user_id", "cnt")
       } finally {
         deltas.unpersist()
@@ -927,20 +926,14 @@ private[graft] object CoreGate {
         store.merge(s, deltas, BatchID(cutBatch))(Semigroup.longSemigroup).count()
         val keys = eventsDF(s, dir).select(col("user_id")).distinct()
           .orderBy(col("user_id")).limit(6).as[Long].collect()
-        // serving reads pin a SMALL shuffle width: each get merges ONE
-        // key's snapshot row + deltas, so a 32-partition shuffle per get
-        // is pure task overhead (a real point-serving deployment sizes
-        // its request-path partitions to the request, not the corpus)
-        val (singles, multi) = withPinnedShufflePartitions(s, 4) {
-          val ones = keys.toSeq.map { k =>
-            (k, ClientStore.get(s, store, deltas, k)(
-              Semigroup.longSemigroup, implicitly, implicitly).getOrElse(0L))
-          }
-          // the storehaus multiGet shape: ONE pruned job for the whole key
-          // set must agree with the per-key gets exactly
-          (ones, ClientStore.getBatch(s, store, deltas, keys.toSeq)(
-            Semigroup.longSemigroup, implicitly, implicitly))
+        val singles = keys.toSeq.map { k =>
+          (k, ClientStore.get(s, store, deltas, k)(
+            Semigroup.longSemigroup, implicitly, implicitly).getOrElse(0L))
         }
+        // the storehaus multiGet shape: ONE pruned job for the whole key
+        // set must agree with the per-key gets exactly
+        val multi = ClientStore.getBatch(s, store, deltas, keys.toSeq)(
+          Semigroup.longSemigroup, implicitly, implicitly)
         require(multi == singles.toMap,
           s"getBatch disagrees with per-key gets: $multi vs $singles")
         multi.toSeq.toDF("user_id", "cnt")

@@ -181,6 +181,46 @@ class LambdaSliceSpec extends AnyFunSuite {
         .contains(model(w)), s"get($w)")
   }
 
+  test("ClientStore.getBatch folds offline-then-online in batch order: equals merged on its keys") {
+    val s = spark; import s.implicits._
+    val sg: Semigroup[List[Long]] = Semigroup.from(commutative = false)(_ ++ _)
+    val evs: Seq[(Long, String)] = events
+    val listDeltas = GraftStream.from(evs.toDS())(_._1)
+      .asKeyedWith(_._2, (e: (Long, String)) => List(e._1))
+      .sumDeltasPerBatch(batcher)(sg)
+    // "late" has deltas only in the online range (batches 7 and 8), so it
+    // is absent from the snapshot
+    val online = listDeltas.union(Seq(("late", 7L, List(701L)), ("late", 8L, List(801L))).toDS())
+    val tmp = Files.createTempDirectory("graft_lambda_gb_nc_").toString
+    val store = new BatchStore[String, List[Long]](tmp, keyBuckets = Some(4))
+    store.merge(spark, listDeltas, BatchID(4))(sg).collect()
+    val keys = words :+ "late" :+ "absent"
+    // upTo = 7 cuts inside the online range (5..9): batch 8 and 9 deltas
+    // are excluded, "late" keeps only its batch-7 delta
+    for (upTo <- Seq(BatchID(7), BatchID(Long.MaxValue))) {
+      val merged = ClientStore.merged(spark, store, online, upTo)(sg, implicitly, implicitly)
+        .collect().toMap
+      val got = ClientStore.getBatch(spark, store, online, keys, upTo)(sg, implicitly, implicitly)
+      assert(got == merged.view.filterKeys(keys.toSet).toMap, s"upTo=$upTo")
+      assert(!got.contains("absent"))
+      assert(got("late") == (if (upTo == BatchID(7)) List(701L) else List(701L, 801L)))
+      val model = evs.filter(e => batcher.batchOf(Timestamp(e._1)).id <= upTo.id)
+        .groupBy(_._2).view.mapValues { ws =>
+          ws.map(_._1).sortBy(t => (batcher.batchOf(Timestamp(t)).id, t)).toList
+        }.toMap
+      assert(got.removed("late") == model, s"upTo=$upTo")
+    }
+  }
+
+  test("ClientStore.getBatch of an empty key set is an empty map") {
+    val s = spark; import s.implicits._
+    val tmp = Files.createTempDirectory("graft_lambda_gb_empty_").toString
+    val store = new BatchStore[String, Long](tmp, keyBuckets = Some(4))
+    store.merge(spark, deltaDs, BatchID(4))(Semigroup.longSemigroup).collect()
+    assert(ClientStore.getBatch(spark, store, deltaDs, Seq.empty[String])(
+      Semigroup.longSemigroup, implicitly, implicitly) == Map.empty)
+  }
+
   test("the SAME GraftStream operator pipeline runs on a streaming Dataset (one API, two planners)") {
     val s = spark; import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
