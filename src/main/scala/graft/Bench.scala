@@ -290,7 +290,7 @@ object Bench {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         .select("doc_id", "text")
       val idx = operators.Retrieval.buildIndex(docs, "text", "doc_id")
-      val qdf = SparkEntry.bm25Queries(spark)
+      val qdf = GateHelpers.bm25Queries(spark)
       val (_, survivors) = operators.Retrieval.bm25TopKPrunedDiag(
         idx, qdf, "qtext", "query_id", k = 3)
       // per-query scored/candidate groups (r13 verdict #7): the aggregate

@@ -36,13 +36,6 @@ object SparkEntry {
       .toDF("word", "cnt")
   }
 
-  /** Re-exports used by Bench/ScaleProbe (the helpers moved to
-    * [[GateHelpers]] in the round-19 registry split).
-    */
-  private[graft] def bm25Queries(s: SparkSession): DataFrame =
-    GateHelpers.bm25Queries(s)
-  private[graft] val RocksDBProvider: String = GateHelpers.RocksDBProvider
-
   // ---------------------------------------------------------------------
   // operator inventory — concatenation of the per-family gate registries
   // (CoreGate / StreamingGate / DedupGate / AnnGate / TextGate). Keys are

@@ -941,12 +941,12 @@ private[graft] object AnnGate {
           batches.foreach(b => Similarity.nswAppendToStored(s, tmpB, df(b),
             "embedding", "vec_id"))
           val idxB = Similarity.readNswIndex(s, tmpB).localCheckpoint(true)
-          setEqUnique(idxS, idxB)
+          setEq(idxS, idxB)
         }
         val eqRebuild = PhaseTimer.time("q_streaming_nsw", "rebuild_oracle") {
           val rebuilt = Similarity.nswBuild(df(rows.toSeq :+ needle),
             "embedding", "vec_id").localCheckpoint(true)
-          setEqUnique(idxS, rebuilt)
+          setEq(idxS, rebuilt)
         }
         idxS.agg(count(lit(1)).as("n_vecs"))
           .withColumn("needle_mid_stream", lit(needleMidStream))
@@ -1516,7 +1516,7 @@ private[graft] object AnnGate {
         val eq = PhaseTimer.time("q_nsw_append_stored", "rebuild_oracle") {
           val rebuilt = Similarity.nswBuild(e0.unionByName(day2),
             "embedding", "vec_id").localCheckpoint(true)
-          setEqUnique(idx, rebuilt)
+          setEq(idx, rebuilt)
         }
         Similarity.nswSearchBuilt(idx, "embedding", "vec_id", q, k = 10)
           .agg(count(lit(1)).as("k"), countDistinct(col("vec_id")).as("n_ids"),
@@ -1589,7 +1589,7 @@ private[graft] object AnnGate {
         .localCheckpoint(true)
       val rebuilt = Similarity.hnswBuild(e0.unionByName(day2), "embedding", "vec_id")
         .localCheckpoint(true)
-      val eq = setEqUnique(incr, rebuilt)
+      val eq = setEq(incr, rebuilt)
       Similarity.hnswSearchBuilt(incr, "embedding", "vec_id", q, k = 10)
         .agg(count(lit(1)).as("k"), countDistinct(col("vec_id")).as("n_ids"),
           max(col("vec_id") === base && col("hnsw_sim") === 1.0).as("needle_found"))
@@ -1621,7 +1621,7 @@ private[graft] object AnnGate {
         .localCheckpoint(true)
       val rebuilt = Similarity.nswBuild(e0.unionByName(day2), "embedding", "vec_id")
         .localCheckpoint(true)
-      val eq = setEqUnique(incr, rebuilt)
+      val eq = setEq(incr, rebuilt)
       Similarity.nswSearchBuilt(incr, "embedding", "vec_id", q, k = 10)
         .agg(count(lit(1)).as("k"), countDistinct(col("vec_id")).as("n_ids"),
           max(col("vec_id") === base && col("nsw_sim") === 1.0).as("needle_found"))

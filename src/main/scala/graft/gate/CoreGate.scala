@@ -436,7 +436,7 @@ private[graft] object CoreGate {
           col("cnt"))
         .localCheckpoint(true) // both except directions read it; compute once
       val eq = withPinnedShufflePartitions(s, 4) {
-        setEqUnique(streamed, batch)
+        setEq(streamed, batch)
       }
       streamed.agg(count(lit(1)).as("n_windows"))
         .withColumn("stream_eq_batch", lit(eq))
@@ -487,7 +487,7 @@ private[graft] object CoreGate {
         .select(col("user_id"), col("session_start"), col("session_end"), col("n_events"))
         .localCheckpoint(true) // both except directions read it; compute once
       val eq = withPinnedShufflePartitions(s, 4) {
-        setEqUnique(streamed, batch)
+        setEq(streamed, batch)
       }
       streamed.agg(count(lit(1)).as("n_sessions"))
         .withColumn("stream_eq_batch", lit(eq))
@@ -578,7 +578,7 @@ private[graft] object CoreGate {
       val forced = base.name("ordered", commutative = false)
         .sumByKeyAllTime(Semigroup.longSemigroup, implicitly)
         .localCheckpoint(true)
-      val pathsEqual = setEqUnique(default.toDF("user_id", "cnt"),
+      val pathsEqual = setEq(default.toDF("user_id", "cnt"),
         forced.toDF("user_id", "cnt"))
       val sharded = eventStream(s, dir).name("resharded", shards = 7)
         .flatMap(e => Iterator.single(e.event_id))

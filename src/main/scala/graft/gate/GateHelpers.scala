@@ -130,16 +130,14 @@ private[graft] object GateHelpers {
     bm25QuerySet.toDF("query_id", "qtext")
   }
 
-  /** One-sided set equality for two MATERIALIZED, duplicate-free frames
-    * (round 21, r20 verdict #7): |A| = |B| ∧ A∖B = ∅ ⟺ A = B when each
-    * frame's rows are unique (every caller keys rows by a unique id or
-    * group key, so `except`'s set semantics see one row per key). Counts
-    * on checkpointed frames are near-free; this halves the except joins
-    * each equality oracle pays. Same boolean as the two-directional
-    * form — audit-only, results identical.
+  /** Multiset equality of two MATERIALIZED frames with one one-sided
+    * difference: |A| = |B| ∧ A ∖ B = ∅ (bag difference, `exceptAll`) ⟺
+    * A = B as multisets, on ANY input — a duplicated row counts. Counts
+    * on checkpointed frames are near-free; this halves the difference
+    * joins a two-directional check pays.
     */
-  private[graft] def setEqUnique(a: DataFrame, b: DataFrame): Boolean =
-    a.count() == b.count() && a.except(b).count() == 0
+  private[graft] def setEq(a: DataFrame, b: DataFrame): Boolean =
+    a.count() == b.count() && a.exceptAll(b).count() == 0
 
   /** Shared verification tail of the int8 stored-serving rows
     * (q_ann_int8_stored, q_streaming_ann): both pin the SAME invariants —

@@ -603,28 +603,6 @@ object Dedup {
       }.toDF(idCol, "text_clean", "n_removed")
   }
 
-  /** Distributed connected components over an undirected pair set — the
-    * transitive-closure upgrade to this family's single-pass "smallest id
-    * among direct candidates survives" policy (see the object scaladoc):
-    * with components, a chain a~b~c collapses to ONE survivor even when a
-    * and c never pair directly. Min-label propagation: each round every
-    * node adopts the smallest label among itself and its neighbors — one
-    * equi-join + hash-agg per round over (id, label) Longs only, never a
-    * payload column — and rounds needed = component diameter. Near-dup
-    * components are dense (LSH re-pairs everything mutually similar), so
-    * the diameter is small in practice; `maxIters` caps pathological
-    * chains, and the alternating large-star/small-star contraction
-    * (Kiveris et al., SoCC'14) is the O(log² n)-round upgrade if a
-    * workload ever needs it. Each round localCheckpoints the label frame
-    * so the iterative lineage never re-executes from the source.
-    *
-    * Returns (`idOut`, "comp"), comp = the minimum id reachable. Nodes in
-    * no pair are absent (their component is trivially themselves).
-    */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      idOut: String = "id", maxIters: Int = 20): DataFrame =
-    connectedComponentsDetailed(pairs, aCol, bCol, idOut, maxIters).components
-
   /** Outcome of an iterative components loop. A non-converged result is
     * UNDER-MERGED — some nodes still carry a label larger than their true
     * component minimum — so callers that silently consume `components`
@@ -635,56 +613,29 @@ object Dedup {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  private def warnIfNotConverged(algo: String, r: CcResult, maxIters: Int): CcResult = {
+  private def warnIfNotConverged(r: CcResult, maxIters: Int): CcResult = {
     if (!r.converged)
-      log.warn(s"connectedComponents($algo) exhausted maxIters=$maxIters without " +
+      log.warn(s"connectedComponentsStar exhausted maxIters=$maxIters without " +
         "converging: the returned components are UNDER-MERGED (labels not yet " +
         "minimal); downstream transitive dedup will under-deduplicate. " +
-        "Raise maxIters or switch algorithms (star contraction converges in " +
-        "O(log^2 n) rounds regardless of diameter).")
+        "Raise maxIters.")
     r
   }
 
-  /** [[connectedComponents]] exposing rounds-used and convergence. */
-  def connectedComponentsDetailed(pairs: DataFrame, aCol: String, bCol: String,
-      idOut: String = "id", maxIters: Int = 20): CcResult = {
-    val edges = pairs
-      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .union(pairs.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var comp = edges.select(col("src").as(idOut)).distinct()
-      .select(col(idOut), col(idOut).as("comp"))
-      .localCheckpoint(true)
-    var iter = 0
-    var converged = false
-    while (iter < maxIters && !converged) {
-      val viaNbr = edges
-        .join(comp.withColumnRenamed(idOut, "__nbr"), col("dst") === col("__nbr"))
-        .select(col("src").as(idOut), col("comp"))
-      val next = comp.union(viaNbr)
-        .groupBy(col(idOut)).agg(min(col("comp")).as("comp"))
-        .localCheckpoint(true)
-      val changed = next
-        .join(comp.withColumnRenamed("comp", "__old"), idOut)
-        .where(col("comp") =!= col("__old")).limit(1).count()
-      comp = next
-      converged = changed == 0L
-      iter += 1
-    }
-    edges.unpersist()
-    warnIfNotConverged("min-label", CcResult(comp, iter, converged), maxIters)
-  }
-
-  /** Connected components by ALTERNATING STAR CONTRACTION (the two-operation
+  /** Distributed connected components over an undirected pair set — the
+    * transitive-closure upgrade to this family's single-pass "smallest id
+    * among direct candidates survives" policy (see the object scaladoc):
+    * with components, a chain a~b~c collapses to ONE survivor even when a
+    * and c never pair directly.
+    *
+    * The algorithm is ALTERNATING STAR CONTRACTION (the two-operation
     * algorithm of Kiveris, Lattanzi, Mirrokni, Rastogi & Vassilvitskii,
     * "Connected Components in MapReduce and Beyond", SoCC'14 — public
     * algorithm; provenance: the reference has no components operator, this
-    * is the LLM-extension layer). Unlike min-label propagation
-    * ([[connectedComponents]], rounds = component DIAMETER), star
-    * contraction converges in O(log^2 n) rounds on ANY graph shape — the
-    * difference between 3 jobs and 10,000 jobs on a pathological chain
-    * (crawl mirrors re-posting each other in sequence).
+    * is the LLM-extension layer). Unlike min-label propagation (rounds =
+    * component DIAMETER), star contraction converges in O(log^2 n) rounds
+    * on ANY graph shape — the difference between 3 jobs and 10,000 jobs on
+    * a pathological chain (crawl mirrors re-posting each other in sequence).
     *
     * Each round runs two edge rewrites, each one groupBy + one join over
     * (long, long) edges — no payload columns ever shuffle:
@@ -704,8 +655,8 @@ object Dedup {
     * by then). Every round localCheckpoints so the iterative lineage never
     * re-executes.
     *
-    * Same contract as [[connectedComponents]]: returns (`idOut`, "comp"),
-    * comp = minimum reachable id; isolated nodes absent.
+    * Returns (`idOut`, "comp"), comp = the minimum id reachable. Nodes in
+    * no pair are absent (their component is trivially themselves).
     */
   def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
       idOut: String = "id", maxIters: Int = 50): DataFrame =
@@ -792,7 +743,7 @@ object Dedup {
     val comp = nodes
       .join(outEdges.withColumnRenamed("src", "n"), Seq("n"), "left")
       .select(col("n").as(idOut), coalesce(col("dst"), col("n")).as("comp"))
-    warnIfNotConverged("star-contraction", CcResult(comp, iter, converged), maxIters)
+    warnIfNotConverged(CcResult(comp, iter, converged), maxIters)
   }
 
   /** [[minhashLsh]] with TRANSITIVE closure: verified pairs → connected
@@ -801,20 +752,16 @@ object Dedup {
     * intermediates (e.g. ids 2~9 and 9~5: 5's only direct pair is the
     * larger 9) is still deduplicated into the component.
     *
-    * Components default to star contraction ([[connectedComponentsStar]]) —
+    * Components run through star contraction ([[connectedComponentsStar]]) —
     * round count independent of component diameter, so pathological chains
     * (crawl mirrors re-posting each other in sequence) cost O(log^2 n)
-    * Spark jobs instead of O(diameter). `starContraction = false` selects
-    * min-label propagation (fewer rounds on the shallow, dense components
-    * LSH typically produces).
+    * Spark jobs instead of O(diameter).
     */
   def minhashLshTransitive(df: DataFrame, textCol: String, idCol: String,
       w: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
-      threshold: Double = 0.8, starContraction: Boolean = true): DataFrame = {
+      threshold: Double = 0.8): DataFrame = {
     val pairs = minhashVerifiedPairs(df, textCol, idCol, w, bands, rowsPerBand, threshold)
-    val comp =
-      if (starContraction) connectedComponentsStar(pairs, "id_a", "id_b", idCol)
-      else connectedComponents(pairs, "id_a", "id_b", idCol)
+    val comp = connectedComponentsStar(pairs, "id_a", "id_b", idCol)
     val drop = comp.where(col("comp") < col(idCol)).select(col(idCol))
     df.join(drop, Seq(idCol), "left_anti")
   }
@@ -1092,7 +1039,7 @@ object Dedup {
     * This operator separates the POLICY (a score column) from the closure.
     *
     * Shape at scale: components run over (long, long) edge pairs only
-    * (star contraction by default — O(log² n) rounds regardless of chain
+    * (star contraction — O(log² n) rounds regardless of chain
     * diameter); the winner election is ONE hash aggregation of
     * (comp, score, id) rows via `max_by` — no window over the corpus, no
     * payload columns in any shuffle. Docs outside every pair short-circuit
@@ -1101,11 +1048,8 @@ object Dedup {
     * Returns (`idCol`, "canon_id") for EVERY input row.
     */
   def canonicalByScore(docs: DataFrame, pairs: DataFrame, idCol: String,
-      scoreCol: String, aCol: String = "id_a", bCol: String = "id_b",
-      starContraction: Boolean = true): DataFrame = {
-    val comp =
-      if (starContraction) connectedComponentsStar(pairs, aCol, bCol, idCol)
-      else connectedComponents(pairs, aCol, bCol, idCol)
+      scoreCol: String, aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
+    val comp = connectedComponentsStar(pairs, aCol, bCol, idCol)
     val withComp = docs.select(col(idCol), col(scoreCol))
       .join(comp, Seq(idCol), "left")
       .withColumn("__comp", coalesce(col("comp"), col(idCol).cast("long")))
@@ -1127,10 +1071,9 @@ object Dedup {
     */
   def minhashLshCanonical(df: DataFrame, textCol: String, idCol: String,
       scoreCol: String, w: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
-      threshold: Double = 0.8, starContraction: Boolean = true): DataFrame = {
+      threshold: Double = 0.8): DataFrame = {
     val pairs = minhashVerifiedPairs(df, textCol, idCol, w, bands, rowsPerBand, threshold)
-    val keep = canonicalByScore(df, pairs, idCol, scoreCol,
-      starContraction = starContraction)
+    val keep = canonicalByScore(df, pairs, idCol, scoreCol)
       .where(col(idCol) === col("canon_id")).select(col(idCol))
     df.join(keep, Seq(idCol), "left_semi")
   }

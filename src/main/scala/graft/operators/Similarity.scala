@@ -591,18 +591,11 @@ object Similarity {
     ivfTier.driftStatsRow(spark, path,
       readIvfCentroids(spark, path).length, imbalanceWarn, appendedWarn)
 
-  /** Per-cell live-occupancy estimate from the per-segment cellstats
-    * tables (O(segments) tiny reads — see [[CodesTier.cellOccupancy]]);
-    * the raw table behind [[ivfDriftStats]], exposed for probes that
-    * want per-cell arithmetic (e.g. a query's scored-row mass).
-    */
-  def ivfCellOccupancy(spark: SparkSession, path: String): DataFrame =
-    ivfTier.cellOccupancy(spark, path)
-
   /** Measured cell count for an IVF index over `n` vectors:
     * `min(4·√N, N/768)`, clamped to [16, 65536] and rounded to a power
     * of two (so doubling the corpus steps the geometry predictably).
-    * Two regimes, both measured by the ScaleProbe ivf arms:
+    * Two regimes, both measured (`bench/bench_r18_ivf_cells_probe.json`,
+    * `bench/bench_r19_ivf_auto_probe.json`):
     *
     *  - **√N term** (FAISS practice): a pruned serve scans the MASS of
     *    its probed cells, so at FIXED nCentroids serving cost is linear

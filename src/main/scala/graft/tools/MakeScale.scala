@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * sf0.001/0.01/0.1 only). Two modes:
   *
   * - default (self-union): the three volume tables (events, documents,
-  *   embeddings) self-union N times with ids shifted into disjoint ranges
-  *   (same scheme as ScaleProbe). HONEST CAVEAT, recorded with every
+  *   embeddings) self-union N times with ids shifted into disjoint
+  *   ranges. HONEST CAVEAT, recorded with every
   *   number derived from this output: every document/vector becomes an
   *   N-way near-duplicate, so dedup/similarity operators do STRICTLY MORE
   *   pair work than on organically larger data, while key cardinalities

@@ -1,31 +1,45 @@
 package graft.tools
 
-import scala.collection.mutable
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.Dedup
+import graft.GateHelpers.{docsDs, eventsDF, withStreamingGateConf}
 
-/** Growth-shape probe for the heavy operators (the SURVEY "scale
-  * evidence" methodology): self-union the sf inputs `factor`x with
-  * shifted ids, write to scratch parquet, then time each operator warm
-  * (second run) at 1x and at `factor`x. An operator whose cost tracks
-  * data volume linearly (or better) at 4x is presumed shuffle-shaped
-  * correctly for the 100 TB target; super-linear growth flags an
-  * accidental pair blowup.
+/** The two scale measurements no gate row takes, read at 1x and at N-x:
   *
-  * Usage: runMain graft.tools.ScaleProbe <sfDir> <factor> [op,...]
+  *  - `decades`: every streaming state machine (sum, sum_horizon, dedup,
+  *    minhash, minhash_horizon, sessionize) at the gate's streaming conf,
+  *    reporting PEAK and FINAL state rows/bytes beside wall — the
+  *    boundedness story of each machine as a measured number per scale.
+  *    One machine can be probed alone by its name.
+  *  - `stored_read_amp`: read amplification of a stored NSW index over
+  *    many append generations, then the compaction that folds them.
+  *
+  * Every other scaled timing is a gate row: `MakeScale` writes the N-x
+  * tables and `graft.Bench` (with `SPARK_GRAFT_ONLY`) times them.
+  *
+  * Usage: runMain graft.tools.MakeScale <baseDir> <scaledDir> <N> [organic]
+  *   then runMain graft.tools.ScaleProbe <baseDir> <scaledDir>
+  *        [decades|stored_read_amp|<machine>,...]  (default: both arms)
   */
 object ScaleProbe {
+  private val machines = Seq("streaming_minhash", "streaming_minhash_horizon",
+    "streaming_sum", "streaming_sum_horizon", "streaming_dedup",
+    "streaming_sessionize")
+  private val arms = Seq("decades", "stored_read_amp") ++ machines
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val factor = args.lift(1).map(_.toInt).getOrElse(4)
-    val opsArg = args.lift(2).map(_.split(",").toSet).filterNot(_.contains("all"))
-    // growth-shape mode: "selfunion" (default; pessimistic — every row an
-    // N-way near-duplicate) or "organic" (fresh samples from the same
-    // distribution family, Organic.scala — realistic pair-volume growth)
-    val mode = args.lift(3).getOrElse("selfunion")
+    require(args.length >= 2, "usage: ScaleProbe <baseDir> <scaledDir> " +
+      s"[${arms.mkString("|")},...]")
+    val (baseDir, scaledDir) = (args(0), args(1))
+    val opsArg = args.lift(2).map(_.split(",").toSet)
+    opsArg.foreach { ops =>
+      val unknown = ops -- arms
+      require(unknown.isEmpty, s"unknown ScaleProbe arm(s) " +
+        s"${unknown.mkString(",")}; accepted: ${arms.mkString(", ")}")
+    }
     val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", 32)
@@ -35,642 +49,58 @@ object ScaleProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import graft.functions.{SketchAggregates => SK}
+    import spark.implicits._
+    println(s"PROBE base=$baseDir scaled=$scaledDir")
 
-    val scratch = java.nio.file.Files.createTempDirectory("graft_probe_").toString
-    def selfUnion(df: DataFrame, idCol: String, n: Int): DataFrame =
-      (0 until n).map(i => df.withColumn(idCol, col(idCol) + lit(i * 1000000L)))
-        .reduce(_ unionByName _)
-    def prep(name: String, df: DataFrame): String = {
-      val p = s"$scratch/$name"
-      df.write.mode("overwrite").parquet(p)
-      p
-    }
-    val docsRaw = spark.read.parquet(s"$sfDir/documents.parquet")
-    val eventsRaw = graft.sources.EventTime
-      .normalize(spark.read.parquet(s"$sfDir/events.parquet"))
-    val embsRaw = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    def evCols(df: DataFrame) = df.select(col("event_type"), col("user_id"),
-      col("value"), expr("ts DIV 1000000").as("ts_ms"), col("event_id"))
-    val docs = docsRaw.select("doc_id", "text")
-    val embs = embsRaw.select("vec_id", "embedding")
-    val docs1 = prep("docs1", docs)
-    val ev1 = prep("ev1", evCols(eventsRaw))
-    val emb1 = prep("emb1", embs)
-    // LAZY (round 18): arms that probe the base tables only (ivf_drift,
-    // ivf_cells — typically pointed at an already-scaled directory) must
-    // not pay a factor-x scratch materialization they never read
-    lazy val docsN = mode match {
-      case "organic" =>
-        prep(s"docs$factor", Organic.docs(spark, docsRaw, factor).select("doc_id", "text"))
-      case _ => prep(s"docs$factor", selfUnion(docs, "doc_id", factor))
-    }
-    lazy val evN = mode match {
-      case "organic" => prep(s"ev$factor", evCols(Organic.events(spark, eventsRaw, factor)))
-      case _         => prep(s"ev$factor", selfUnion(evCols(eventsRaw), "user_id", factor))
-    }
-    lazy val embN = mode match {
-      case "organic" =>
-        prep(s"emb$factor", Organic.embeddings(spark, embsRaw, factor)
-          .select("vec_id", "embedding"))
-      case _ => prep(s"emb$factor", selfUnion(embs, "vec_id", factor))
-    }
-    println(s"PROBE mode=$mode factor=$factor sf=$sfDir")
+    def docs(dir: String): Array[(Long, String)] =
+      docsDs(spark, dir).where(col("text").isNotNull)
+        .as[(Long, String)].collect()
 
-    def time(f: => Long): Double = {
-      f // warm
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    // every action folds the OUTPUT columns into a checksum, so column
-    // pruning can't skip the work a bare count() would let Catalyst drop
-    val ops: Map[String, String => Long] = Map(
-      // round 20 (r19 verdict #2's done-criterion): executor-side MMR —
-      // queries GROW with the corpus (n/40 per path, so the factor-x arm
-      // re-ranks factor-x as many queries) while the driver collects
-      // nothing; the printed heap delta (before/after, post-GC) is the
-      // flat-driver-memory evidence, and the wall ratio the linear-work
-      // evidence. Candidates are 32 deterministic corpus rows per query
-      // via a dense row_number index — the probe measures the MMR
-      // machinery, not a serve.
-      "mmr_dist" -> { p =>
-        import org.apache.spark.sql.expressions.Window
-        val e = spark.read.parquet(p).select(col("vec_id"), col("embedding"))
-        val n = e.count()
-        val idx = e.select(col("vec_id"))
-          .withColumn("__r", row_number().over(Window.orderBy(col("vec_id"))) - 1)
-          .localCheckpoint(true)
-        val stride = math.max(1L, n / math.max(1L, n / 40))
-        val qn = n / stride
-        val queries = idx.where(col("__r") % stride === 0)
-          .join(e, "vec_id")
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-        val cand = idx.where(col("__r") % stride === 0)
-          .select(col("vec_id").as("q_id"), col("__r").as("__qr"))
-          .withColumn("__j", explode(sequence(lit(0), lit(31))))
-          .withColumn("__r", pmod(col("__qr") * 131 + col("__j") * 977, lit(n)))
-          .join(idx, "__r")
-          .select(col("q_id"), col("vec_id")).distinct()
-        def heap(): Long = {
-          System.gc(); Thread.sleep(100)
-          val rt = Runtime.getRuntime; rt.totalMemory() - rt.freeMemory()
-        }
-        val h0 = heap()
-        val out = graft.operators.Similarity.mmrRerankJoinDistributed(
-          cand, "q_id", "vec_id", e, "embedding", "vec_id",
-          queries, "q_vec", "q_id", k = 8, lambda = 0.5)
-          .agg(count(lit(1)).as("c"), sum(col("mmr_rank")).as("s"))
-          .collect().head
-        val h1 = heap()
-        println(s"MMRDIST n=$n queries=$qn out_rows=${out.getLong(0)} " +
-          s"driver_heap_before=$h0 driver_heap_after=$h1 delta=${h1 - h0}")
-        out.getLong(1)
-      },
-      // round 20 (r19 verdict #3's done-criterion): the stored BM25
-      // serve's filesystem bytes, IO-pruned vs classic, on a store
-      // written with 1 MiB row groups — the factor-x arm is the
-      // materially-fewer-bytes evidence at scale.
-      "bm25_io" -> { p =>
-        val docs = spark.read.parquet(p).select("doc_id", "text")
-        val dir = s"$scratch/bm25io_${math.abs(p.hashCode)}"
-        if (!graft.batch.StoreFs.exists(s"$dir/_graft_state.json"))
-          graft.operators.Retrieval.writeIndex(
-            graft.operators.Retrieval.buildIndex(docs, "text", "doc_id"),
-            dir, tokenBuckets = 16, rowGroupBytes = Some(1L << 20))
-        val qs = graft.SparkEntry.bm25Queries(spark)
-        def serve(io: Boolean): (Long, Long) = {
-          val b0 = graft.GateHelpers.fsBytesRead()
-          val c = graft.operators.Retrieval.bm25TopKFromStored(spark, dir,
-            tokenBuckets = 16, qs, "qtext", "query_id", "doc_id", k = 3,
-            ioPrune = io).count()
-          (c, graft.GateHelpers.fsBytesRead() - b0)
-        }
-        val (cIo, bIo) = serve(io = true)
-        val (cCl, bCl) = serve(io = false)
-        println(f"BM25IO path=$p rows_io=$cIo rows_classic=$cCl " +
-          f"bytes_io=$bIo bytes_classic=$bCl ratio=${
-            bIo.toDouble / math.max(1L, bCl)}%.3f")
-        require(cIo == cCl, s"io/classic row counts diverge: $cIo vs $cCl")
-        cIo + bIo
-      },
-      "exact_substr" -> (p =>
-        Dedup.removeDuplicatedSpans(spark.read.parquet(p), "text", "doc_id", k = 8)
-          .agg(sum(length(col("text_clean"))), sum(col("n_removed")))
-          .collect().head.getLong(1)),
-      "dedup_cc" -> (p =>
-        Dedup.minhashLshTransitive(spark.read.parquet(p), "text", "doc_id",
-          w = 3, bands = 16, rowsPerBand = 4, threshold = 0.5)
-          .agg(sum(length(col("text")))).collect().head.getLong(0)),
-      // round-8: same transitive dedup via min-label propagation, for the
-      // star-vs-min-label cost comparison on shallow LSH graphs
-      "cc_minlabel" -> (p =>
-        Dedup.minhashLshTransitive(spark.read.parquet(p), "text", "doc_id",
-          w = 3, bands = 16, rowsPerBand = 4, threshold = 0.5,
-          starContraction = false)
-          .agg(sum(length(col("text")))).collect().head.getLong(0)),
-      // round-8: REAL ImageIO encode+decode through the mapPartitions
-      // batch path (one planted PNG per doc, geometry id-derived)
-      "image_decode" -> { p =>
-        import spark.implicits._
-        import graft.functions.Multimodal
-        val media = spark.read.parquet(p)
-          .select(col("doc_id"), col("text")).as[(Long, String)]
-          .map { case (id, _) =>
-            Multimodal.MediaRow(id, Multimodal.MediaMeta("image/png", 0, 0, 1, 0),
-              Multimodal.encodeGrayPng(16 + (id % 16).toInt,
-                16 + (id % 8).toInt, (id % 251).toInt))
-          }
-        Multimodal.featurizeImages(media)
-          .agg(sum(col("width").cast("long") * col("height")))
-          .collect().head.getLong(0)
-      },
-      "bloom_incr" -> { p =>
-        val d = spark.read.parquet(p)
-        Dedup.exactAgainstBloom(d.where(col("doc_id") % 5 === 0),
-          d.where(col("doc_id") % 5 =!= 0), "text", "doc_id",
-          numBits = 1 << 22, k = 5)
-          .agg(sum(length(col("text")))).collect().head.getLong(0)
-      },
-      "heavy_hitters" -> (p =>
-        spark.read.parquet(p).groupBy(col("event_type"))
-          .agg(SK.spaceSaver(col("user_id"), 8192).as("hh"))
-          .agg(sum(size(col("hh")))).collect().head.getLong(0)),
-      "ann_pq" -> { p =>
-        val e = spark.read.parquet(p)
-        graft.operators.Similarity.pqTopK(e, "embedding", "vec_id",
-          Array.tabulate(64)(i => math.sin(i + 1.0)), k = 10, dim = 64)
-          .agg(sum(col("pq_sim"))).collect().head.getDouble(0).toLong
-      },
-      "ann_ivfpq" -> { p =>
-        val e = spark.read.parquet(p)
-        graft.operators.Similarity.ivfPqTopK(e, "embedding", "vec_id",
-          Array.tabulate(64)(i => math.sin(i + 1.0)), k = 10, dim = 64)
-          .agg(sum(col("ivfpq_score"))).collect().head.getDouble(0).toLong
-      },
-      "span_incr" -> { p =>
-        val d = spark.read.parquet(p)
-        Dedup.removeDuplicatedSpansAgainst(d.where(col("doc_id") % 5 === 0),
-          Dedup.spanHashes(d.where(col("doc_id") % 5 =!= 0), "text", k = 8),
-          "text", "doc_id", k = 8)
-          .agg(sum(col("n_removed"))).collect().head.getLong(0)
-      },
-      // round-9: docwise next-fit packing — growth must track the prefix-sum
-      // + per-group-fold shape (group count scales with token volume, each
-      // group folds independently)
-      "pack_docwise" -> { p =>
-        val d = spark.read.parquet(p)
-        graft.operators.Packing.packDocwise(
-            d.select(col("doc_id"),
-              graft.functions.TextFunctions.tokenCount(col("text")).cast("long").as("n")),
-            "doc_id", col("n"), 512L, Seq(col("doc_id")), groupBudget = 4096L)
-          .agg(sum(col("seq_id")), sum(col("seq_offset")))
-          .collect().head.getLong(0)
-      },
-      "moments_bloom_quantile" -> { p =>
-        val ev = spark.read.parquet(p)
-        ev.groupBy(col("event_type")).agg(SK.bloomFilter(col("user_id")).as("b"))
-          .agg(sum(length(col("b")))).collect().head.getLong(0)
-        ev.groupBy(col("event_type")).agg(
-          count(lit(1)).as("n"), avg(col("value")), var_pop(col("value")))
-          .agg(sum(col("n"))).collect().head.getLong(0)
-      },
-      // round-10: the two steepest 4x growth shapes (2.1x / 1.9x), probed
-      // again at 10x to pin that cost tracks shared-gram / cluster-pair
-      // VOLUME (which self-union inflates superlinearly by design), not a
-      // hidden quadratic in corpus size
-      "shared_ngrams" -> (p =>
-        Dedup.sharedNgramStats(spark.read.parquet(p), "text", "doc_id",
-          n = 3, minDocs = 2)
-          .agg(sum(col("n_shared")), sum(col("n_grams")))
-          .collect().head.getLong(0)),
-      "semdedup" -> (p =>
-        Dedup.semanticDedup(spark.read.parquet(p), "embedding", "vec_id",
-          nClusters = 16, threshold = 0.9)
-          .agg(count(lit(1))).collect().head.getLong(0)),
-      // the FIXED-k semdedup probe above grows like within-cluster pair
-      // volume (~n²/k); a real deployment scales k with n (SemDeDup runs
-      // k ∝ corpus size), which this arm pins: k×factor on the factor-x
-      // corpus keeps per-cluster population (and so cost/row) flat
-      "semdedup_scaledk" -> (p =>
-        Dedup.semanticDedup(spark.read.parquet(p), "embedding", "vec_id",
-          nClusters = if (p == embN) 16 * factor else 16, threshold = 0.9)
-          .agg(count(lit(1))).collect().head.getLong(0)),
-      // same scaled-k regime through the two-level coarse quantizer
-      // (assignment ~2√k cosines/row instead of k) — the production
-      // configuration when k grows with the corpus
-      "semdedup_hier" -> (p =>
-        Dedup.semanticDedup(spark.read.parquet(p), "embedding", "vec_id",
-          nClusters = if (p == embN) 16 * factor else 16, threshold = 0.9,
-          hierAssign = true)
-          .agg(count(lit(1))).collect().head.getLong(0)),
-      // round-10: sessionization — one hash exchange on the key, per-key
-      // sorted windows; growth must track event volume
-      "sessionize" -> (p =>
-        graft.operators.Sessionize.sessionize(spark.read.parquet(p),
-          "user_id", "ts_ms", gapMs = 1800000L)
-          .agg(sum(col("n_events")), sum(col("session_seq")))
-          .collect().head.getLong(0)),
-      // round-11: hot-key sessionization — half the corpus collapses onto
-      // ONE user, the regime the pre-split form exists for. The plain arm
-      // funnels that key through one task's sort; the presplit arm spreads
-      // it across (key, day-chunk) windows. Compare the two arms' absolute
-      // times at the same factor (their own 1x->Nx ratios both track
-      // volume; the plain arm's constant is the single-task sort).
-      "sessionize_skew" -> (p =>
-        graft.operators.Sessionize.sessionize(
-          spark.read.parquet(p).withColumn("user_id",
-            when(col("user_id") % 2 === 0, 0L).otherwise(col("user_id"))),
-          "user_id", "ts_ms", gapMs = 1800000L)
-          .agg(sum(col("n_events")), sum(col("session_seq")))
-          .collect().head.getLong(0)),
-      "sessionize_skew_presplit" -> (p =>
-        graft.operators.Sessionize.sessionizePreSplit(
-          spark.read.parquet(p).withColumn("user_id",
-            when(col("user_id") % 2 === 0, 0L).otherwise(col("user_id"))),
-          "user_id", "ts_ms", gapMs = 1800000L, chunkMs = 86400000L)
-          .agg(sum(col("n_events")), sum(col("session_seq")))
-          .collect().head.getLong(0)),
-      // round-11: BM25 build+score — posting volume and per-token df both
-      // grow linearly in corpus size with a FIXED query set, so cost must
-      // track corpus volume (the index shuffle dominates; candidates are
-      // df-proportional)
-      "bm25" -> { p =>
-        import graft.operators.Retrieval
-        val queries = spark.createDataFrame(Seq(
-          (0, "spark window merge"), (1, "customer filter join"),
-          (2, "batch stream data"), (3, "hash join order sort")))
-          .toDF("query_id", "qtext")
-        Retrieval.bm25Scores(spark.read.parquet(p), queries, "text", "doc_id",
-          "qtext", "query_id")
-          .agg(sum(col("score"))).collect().head.getDouble(0).toLong
-      },
-      // round-11: the SERVING side of retrieval — index built+persisted
-      // once per corpus (untimed prep, cached by path), then the timed
-      // work is only the pruned point read + scoring. Latency must be
-      // df-proportional (query-token posting volume), NOT corpus-
-      // proportional: the bucket prune pays for itself here
-      "bm25_stored" -> {
-        val prepared = mutable.Set.empty[String]
-        p => {
-          import graft.operators.Retrieval
-          val idxPath = s"$p.bm25idx"
-          if (!prepared(p)) {
-            Retrieval.writeIndex(Retrieval.buildIndex(
-              spark.read.parquet(p), "text", "doc_id"), idxPath, tokenBuckets = 64)
-            prepared += p
-          }
-          val queries = spark.createDataFrame(Seq(
-            (0, "spark window merge"), (1, "customer filter join")))
-            .toDF("query_id", "qtext")
-          Retrieval.bm25FromStored(spark, idxPath, 64, queries, "qtext",
-            "query_id", "doc_id")
-            .agg(sum(col("score"))).collect().head.getDouble(0).toLong
-        }
-      },
-      // round-12: the int8 stored serving split — index built+persisted
-      // once per corpus (untimed prep, cached by path), timed work is the
-      // codes-only scan + broadcast float re-rank. Per-query latency must
-      // track the CODES volume (linear in corpus, 4x below float bytes),
-      // with no per-query re-quantization
-      "ann_int8_stored" -> {
-        val prepared = mutable.Set.empty[String]
-        p => {
-          import graft.operators.Similarity
-          val idxPath = s"$p.int8idx"
-          if (!prepared(p)) {
-            Similarity.int8WriteIndex(spark.read.parquet(p), "embedding",
-              "vec_id", idxPath)
-            prepared += p
-          }
-          val q = Array.tabulate(64)(i => math.sin(i + 1.0))
-          Similarity.int8TopKStored(spark, idxPath, spark.read.parquet(p),
-              "embedding", "vec_id", q, 10)
-            .agg(sum(col("cosine_sim"))).collect().head.getDouble(0).toLong
-        }
-      },
-      // round-12: WAND-lite top-k vs plain top-k over the SAME prebuilt
-      // index (untimed prep, cached by path — serving-shape timing, like
-      // bm25_stored): the pruned op's scoring volume must stay top-k-
-      // shaped as the corpus grows. The pruned run also prints its
-      // candidate reduction: scored (q,doc) groups pruned vs plain.
-      "bm25_topk" -> {
-        val cache = mutable.Map.empty[String, graft.operators.Retrieval.Bm25Index]
-        p => {
-          import graft.operators.Retrieval
-          val idx = cache.getOrElseUpdate(p, {
-            val i = Retrieval.buildIndex(spark.read.parquet(p), "text", "doc_id")
-            Retrieval.Bm25Index(i.postings.localCheckpoint(true),
-              i.stats.localCheckpoint(true), i.idCol)
-          })
-          val queries = spark.createDataFrame(Seq(
-            (0, "spark window merge"), (1, "customer filter join"),
-            (2, "the and of data"), (3, "hash join order sort")))
-            .toDF("query_id", "qtext")
-          Retrieval.bm25TopK(idx, queries, "qtext", "query_id", k = 10)
-            .agg(sum(col("score"))).collect().head.getDouble(0).toLong
-        }
-      },
-      "bm25_topk_pruned" -> {
-        val cache = mutable.Map.empty[String, graft.operators.Retrieval.Bm25Index]
-        val printed = mutable.Set.empty[String]
-        p => {
-          import graft.operators.Retrieval
-          val idx = cache.getOrElseUpdate(p, {
-            val i = Retrieval.buildIndex(spark.read.parquet(p), "text", "doc_id")
-            Retrieval.Bm25Index(i.postings.localCheckpoint(true),
-              i.stats.localCheckpoint(true), i.idCol)
-          })
-          val queries = spark.createDataFrame(Seq(
-            (0, "spark window merge"), (1, "customer filter join"),
-            (2, "the and of data"), (3, "hash join order sort")))
-            .toDF("query_id", "qtext")
-          if (!printed(p)) {
-            printed += p
-            val (_, candDocs) = Retrieval.bm25TopKPrunedDiag(idx, queries,
-              "qtext", "query_id", k = 10)
-            val plainGroups = Retrieval.bm25FromIndex(idx, queries,
-              "qtext", "query_id").count()
-            // the synthetic corpus has near-uniform df (every token in
-            // ~85% of docs — no Zipf head/tail), so max-score legitimately
-            // finds nothing to prune there and candidate sets are corpus-
-            // sized for ANY engine. The Zipf variant (stopword-dominated
-            // docs, one genuinely rare term each) shows the reduction a
-            // real corpus gets on the rare+stopword query shape WAND
-            // targets: the stopword posting lists are provably
-            // non-essential, so only the rare terms' docs reach scoring.
-            val n = spark.read.parquet(p).count()
-            // rare-term df = 50 at every scale (θ needs df >= k to anchor)
-            val mod = math.max(1L, n / 50)
-            val skew = spark.range(n).select(col("id").as("doc_id"),
-              concat(lit("the of and to in a the of and the "),
-                lit("term"), pmod(col("id"), lit(mod))).as("text"))
-            val skIdx = Retrieval.buildIndex(skew, "text", "doc_id")
-            val skQ = spark.createDataFrame(Seq(
-              (0, "the of term7"), (1, "a to term13"),
-              (2, "in and term21 term22"), (3, "the term5 of and")))
-              .toDF("query_id", "qtext")
-            val (_, skCand) = Retrieval.bm25TopKPrunedDiag(skIdx, skQ,
-              "qtext", "query_id", k = 10)
-            val skPlain = Retrieval.bm25FromIndex(skIdx, skQ,
-              "qtext", "query_id").count()
-            println(f"PROBE-AUX bm25_topk_pruned $p: scored groups " +
-              f"${candDocs.count()} of $plainGroups unpruned (uniform-df " +
-              f"corpus: nothing prunable), ${skCand.count()} of $skPlain " +
-              f"(zipf rare+stopword)")
-          }
-          Retrieval.bm25TopKPruned(idx, queries, "qtext", "query_id", k = 10)
-            .agg(sum(col("score"))).collect().head.getDouble(0).toLong
-        }
-      },
-      // round-11: canonical election — pair gen + components + one max_by
-      // agg; must track verified-pair volume exactly like dedup_cc (the
-      // election adds a corpus-linear agg, never a window)
-      "dedup_canonical" -> { p =>
-        val d = spark.read.parquet(p).withColumn("score", length(col("text")))
-        val pairs = Dedup.minhashVerifiedPairs(d, "text", "doc_id",
-          w = 3, bands = 16, rowsPerBand = 4, threshold = 0.5)
-        Dedup.canonicalByScore(d, pairs, "doc_id", "score")
-          .agg(sum(col("canon_id"))).collect().head.getLong(0)
-      },
-      // round-11 second half: epoch shuffle + trainer sharding — ONE
-      // balanced range shuffle on the md5 key plus the broadcast offsets
-      // join; growth must track the sort (~n log n), no window funnels
-      "epoch_shard" -> { p =>
-        import graft.operators.Sharding
-        Sharding.shardAssign(spark.read.parquet(p).select("doc_id"),
-            col("doc_id"), worldSize = 64, seed = 7L)
-          .agg(sum(col("ord") * (col("shard") + 1)))
-          .collect().head.getLong(0)
-      },
-      // round-11 third phase: the persisted shard layout — assignment +
-      // one hash repartition + per-task sort + partitioned write + read
-      // back; must track the epoch_shard sort plus linear write volume
-      "shard_export" -> { p =>
-        import graft.operators.Sharding
-        val out = s"$p.shards"
-        Sharding.writeShards(spark.read.parquet(p).select("doc_id"),
-          col("doc_id"), worldSize = 64, seed = 7L, out)
-        spark.read.parquet(out).agg(sum(col("ord")))
-          .collect().head.getLong(0)
-      },
-      // round-11 third phase: int8 embedding quantization — element-wise
-      // codegen'd transform, zero shuffle; must be flat-linear
-      "embed_quant" -> { p =>
-        import graft.functions.{VectorFunctions => VFn}
-        spark.read.parquet(p).select(
-            VFn.int8Quantize(col("embedding")).as("codes"))
-          .agg(sum(element_at(col("codes"), 1).cast("long")))
-          .collect().head.getLong(0)
-      },
-      // round-11 third phase: two-stage int8 serving read — codes-only
-      // corpus scan + bounded exact re-rank; must stay a linear scan with
-      // no shuffle growth
-      "ann_int8" -> { p =>
-        import graft.operators.Similarity
-        val q = Array.tabulate(64)(i => math.sin(i + 1.0))
-        Similarity.int8TopK(spark.read.parquet(p), "embedding", "vec_id", q, 10)
-          .agg(sum(col("vec_id"))).collect().head.getLong(0)
-      },
-      // round-11 third phase: token-window chunking — columnar
-      // slice/explode, must be flat-linear in token volume
-      "chunk" -> { p =>
-        import graft.operators.Chunking
-        Chunking.chunk(spark.read.parquet(p), "text", "doc_id", 32, 8)
-          .agg(sum(col("n_tokens").cast("long")))
-          .collect().head.getLong(0)
-      },
-      // round-11 third phase: stupid-backoff trigram scoring — the
-      // trigram probe join is the cost driver; growth tracks position
-      // volume (both the table build and the probe are linear scans)
-      "lm_backoff" -> { p =>
-        import graft.operators.Scoring
-        val d = spark.read.parquet(p)
-        Scoring.backoffSurprisal(d.where(col("doc_id") % 2 =!= 0),
-            d.where(col("doc_id") % 2 === 0), "text", "doc_id")
-          .agg(sum(col("surprisal"))).collect().head.getDouble(0).toLong
-      },
-      // round-11 third phase: weighted draw without replacement — narrow
-      // key projection + TakeOrdered; flat top-k cost over any corpus
-      "weighted_sample" -> { p =>
-        import graft.operators.Sampling
-        Sampling.weightedSample(
-            spark.read.parquet(p).select(col("doc_id"),
-              length(col("text")).as("w")),
-            col("doc_id"), col("w"), k = 500)
-          .agg(sum(col("doc_id"))).collect().head.getLong(0)
-      },
-      // round-11 third phase: multi-class NB (trained langid shape) —
-      // pseudo-labels from doc_id so the arm runs on any corpus; the
-      // per-doc argmax window spans |classes| rows, never data
-      "nb_multiclass" -> { p =>
-        import graft.operators.Scoring
-        val d = spark.read.parquet(p)
-        val m = Scoring.naiveBayesMultiTrain(d.where(col("doc_id") % 2 === 0),
-          "text", (col("doc_id") % 4).cast("string"))
-        Scoring.naiveBayesMultiPredict(d.where(col("doc_id") % 2 =!= 0), m,
-            "text", "doc_id")
-          .agg(sum(col("score"))).collect().head.getDouble(0).toLong
-      },
-      // round-11 second half: NB classifier — training is one token-count
-      // hash agg over the corpus, scoring is explode + broadcast probe;
-      // both sides linear in token volume, model stays vocabulary-sized
-      "nb_classifier" -> { p =>
-        import graft.operators.Scoring
-        val d = spark.read.parquet(p)
-        val m = Scoring.naiveBayesTrain(d.where(col("doc_id") % 2 === 0),
-          "text", length(col("text")) > 300)
-        Scoring.naiveBayesScore(d.where(col("doc_id") % 2 =!= 0), m,
-            "text", "doc_id")
-          .agg(sum(col("score"))).collect().head.getDouble(0).toLong
-      },
-      // round-15: Dataset-scale deleteKeys — the TIMED work is one
-      // mass revocation (digest-set write + one anti-join rewrite of the
-      // retained snapshot; bootstrap untimed, cached per path). Each call
-      // revokes a FRESH user cohort, because the warm call's cohort would
-      // otherwise make the timed call a no-op guard hit. Cost must track
-      // snapshot rows (the anti-join scans the snapshot once), never
-      // |victims| driver-side — the victim set is a lazy Dataset.
-      "store_delete_mass" -> {
-        val stores = mutable.Map.empty[String, graft.batch.BatchStore[Long, Long]]
-        val calls = mutable.Map.empty[String, Int]
-        p => {
-          import graft.batch.BatchStore
-          import graft.time.BatchID
-          implicit val sg: graft.algebra.Semigroup[Long] =
-            graft.algebra.Semigroup.longSemigroup
-          val sess = spark
-          import sess.implicits._
-          val store = stores.getOrElseUpdate(p, {
-            val deltas = spark.read.parquet(p)
-              .select(col("user_id"), lit(1L).as("b"), lit(1L).as("v"))
-              .groupBy(col("user_id"), col("b")).agg(sum(col("v")).as("v"))
-              .select(col("user_id"), col("b"), col("v")).as[(Long, Long, Long)]
-            val st = new BatchStore[Long, Long](java.nio.file.Files
-              .createTempDirectory("graft_probe_delstore_").toString)
-            st.merge(spark, deltas, BatchID(1L)).count()
-            st
-          })
-          val i = calls.getOrElse(p, 0); calls(p) = i + 1
-          store.deleteKeys(spark.read.parquet(p).select(col("user_id"))
-            .where(pmod(col("user_id"), lit(7)) === i).distinct().as[Long])
-          store.readLast(spark).get._2.map(_._1).reduce(math.max)
-        }
-      },
-      // round-14: BatchStore.backfill — the TIMED work is the historical
-      // recompute only (store bootstrap of three merged versions is
-      // untimed, cached per path). The fold's one shuffle carries
-      // per-(key, batch) summed deltas and emits one row per (key,
-      // retained boundary), so cost must track distinct keys × retained
-      // targets as events grow, with the delta aggregation itself
-      // map-side combined like any sumByKey.
-      "store_backfill" -> {
-        val stores = mutable.Map.empty[String, graft.batch.BatchStore[Long, Long]]
-        p => {
-          import graft.batch.BatchStore
-          import graft.time.BatchID
-          implicit val sg: graft.algebra.Semigroup[Long] =
-            graft.algebra.Semigroup.longSemigroup
-          val sess = spark
-          import sess.implicits._
-          val deltas = spark.read.parquet(p)
-            .select(col("user_id"),
-              (col("ts_ms").cast("long") / lit(86400000L)).cast("long").as("b"),
-              lit(1L).as("v"))
-            .groupBy(col("user_id"), col("b")).agg(sum(col("v")).as("v"))
-            .select(col("user_id"), col("b"), col("v")).as[(Long, Long, Long)]
-          val store = stores.getOrElseUpdate(p, {
-            val st = new BatchStore[Long, Long](java.nio.file.Files
-              .createTempDirectory("graft_probe_store_").toString)
-            st.merge(spark, deltas, BatchID(19736L)).count()
-            st.merge(spark, deltas, BatchID(19768L)).count()
-            st.merge(spark, deltas, BatchID(19800L)).count()
-            st
-          })
-          store.backfill(spark, deltas, BatchID(19737L))
-          store.readLast(spark).get._2.map(_._2).reduce(_ + _)
-        }
-      }
-    )
-    val selected = ops.filter { case (n, _) => opsArg.forall(_.contains(n)) }
-    selected.toSeq.sortBy(_._1).foreach { case (name, f) =>
-      val (d1, dp) = (name match {
-        case "heavy_hitters" | "moments_bloom_quantile" | "sessionize"
-           | "sessionize_skew" | "sessionize_skew_presplit"
-           | "store_backfill" | "store_delete_mass" => (ev1, evN)
-        case "ann_pq" | "ann_ivfpq" | "semdedup" | "semdedup_scaledk"
-           | "semdedup_hier" | "embed_quant" | "ann_int8"
-           | "ann_int8_stored" | "mmr_dist" => (emb1, embN)
-        case _ => (docs1, docsN)
-      })
-      val t1 = time(f(d1))
-      val tN = time(f(dp))
-      spark.catalog.clearCache()
-      println(f"PROBE $name%-24s 1x=${t1}%.2fs ${factor}x=${tN}%.2fs ratio=${tN / t1}%.2f")
-    }
-
-    // round-9: streaming state machines probed the same way the batch
-    // operators were — wall-clock at 1x and factor-x PLUS shuffle-partition
-    // sensitivity (state-store tasks scale with partitions per micro-batch)
-    // and the state store's own size from the final micro-batch's query
-    // progress (rows + memory), so the 100x claim for the streaming half
-    // rests on measured state growth, not shuffle shape alone.
-    // providers: the default heap-backed HDFSBackedStateStore vs RocksDB —
-    // the store the gate queries now run on. RocksDB keeps state in native
-    // memory + local SST files, so its probe rows are the bounded-executor-
-    // heap evidence for the 100M-key regime where the heap-backed map dies.
-    val hdfsProvider = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-    val rocksProvider = graft.SparkEntry.RocksDBProvider
-    def streamProbe(name: String, parts: Int, p: String,
-        provider: String, extra: Map[String, String] = Map.empty): (Double, Long, Long, Long, Long) = {
-      import spark.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val saved = spark.conf.get("spark.sql.shuffle.partitions")
-      val savedProv = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      val savedExtra = extra.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-      extra.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
+    // Runs one state machine over `dir` at the gate's streaming conf
+    // (4 state partitions, RocksDB) and returns its (peak rows, peak
+    // bytes, final rows, final bytes) state.
+    def streamProbe(name: String, dir: String): (Long, Long, Long, Long) =
+      withStreamingGateConf(spark, 4) {
+        implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+        def noop(out: Dataset[_]): StreamingQuery =
+          out.writeStream.format("noop").outputMode("append").start()
         // each arm STARTS its query, then returns (query, feed): the feed
         // and progress inspection run inside try/finally q.stop(), so a
         // throw mid-feed can't leak a running StreamingQuery (and its
         // MemoryStream state) into the rest of the probe process
-        val (q, feed): (org.apache.spark.sql.streaming.StreamingQuery, () => Unit) = name match {
+        val (q, feed): (StreamingQuery, () => Unit) = name match {
           case "streaming_sum" =>
             // q_streaming_sum shape: 4 event-id-sliced micro-batches into
             // the online Summer, state keyed (user, day-batch)
-            val rows = spark.read.parquet(p)
+            val rows = eventsDF(spark, dir)
               .select(col("ts_ms"), col("user_id"), col("event_id"))
               .as[(Long, Long, Long)].collect()
-            val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-            val out = graft.streaming.StreamingSum.sumByKey(
+            val ms = MemoryStream[(Long, Long)]
+            val q = noop(graft.streaming.StreamingSum.sumByKey(
               ms.toDS().map { case (ts, u) => (ts, u, 1L) },
               graft.time.Batcher.ofDays(1))(
-              graft.algebra.Semigroup.longSemigroup, implicitly, implicitly)
-            val q = out.writeStream.format("noop").outputMode("append").start()
+              graft.algebra.Semigroup.longSemigroup, implicitly, implicitly))
             (q, () => (0 until 4).foreach { i =>
               ms.addData(rows.iterator.filter(_._3 % 4 == i).map(r => (r._1, r._2)).toSeq)
               q.processAllAvailable()
             })
           case "streaming_sum_horizon" =>
-            // round 16 (r15 verdict #5): the EVENT-TIME-horizon Summer —
-            // state for a (user, day) group dies when the WATERMARK passes
-            // its newest event, so a replay's resident state tracks the
-            // horizon's arrival volume, never the all-time key space (the
-            // wall-clock-TTL form above holds every key under replay — the
-            // documented trade, measured beside this arm). Feed: event-
-            // time-ordered chunks (the replay shape; nothing arrives late)
-            // + a far-future flush sentinel; FINAL state is what survives
-            // the watermark — the boundedness number.
-            val rows = spark.read.parquet(p)
+            // the EVENT-TIME-horizon Summer: state for a (user, day) group
+            // dies when the WATERMARK passes its newest event, so a
+            // replay's resident state tracks the horizon's arrival volume,
+            // never the all-time key space. Feed: event-time-ordered
+            // chunks (the replay shape; nothing arrives late) + a
+            // far-future flush sentinel; FINAL state is what survives the
+            // watermark — the boundedness number.
+            val rows = eventsDF(spark, dir)
               .select(col("ts_ms"), col("user_id"))
               .as[(Long, Long)].collect().sortBy(_._1)
             val maxTs = rows.iterator.map(_._1).max
-            val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-            val out = graft.streaming.StreamingSum.sumByKeyWithinHorizon(
+            val ms = MemoryStream[(Long, Long)]
+            val q = noop(graft.streaming.StreamingSum.sumByKeyWithinHorizon(
               ms.toDS().map { case (ts, u) => (new java.sql.Timestamp(ts), u, 1L) },
               graft.time.Batcher.ofDays(1), "1 day")(
-              graft.algebra.Semigroup.longSemigroup, implicitly, implicitly)
-            val q = out.writeStream.format("noop").outputMode("append").start()
+              graft.algebra.Semigroup.longSemigroup, implicitly, implicitly))
             (q, () => {
               val chunk = math.max(1, (rows.length + 3) / 4)
               rows.grouped(chunk).foreach { part =>
@@ -683,58 +113,19 @@ object ScaleProbe {
               ms.addData(Seq((maxTs + 30L * 86400000L + 1L, -1L)))
               q.processAllAvailable()
             })
-          case "streaming_join" =>
-            // q_streaming_join shape: watermarked stream-stream buffered
-            // leftJoin over the 10% user slice, two ts-halves + flush
-            val evs = spark.read.parquet(p)
-              .where(col("user_id") % 10 === 0 &&
-                col("event_type").isin("purchase", "signup"))
-              .select(col("event_id"), col("user_id"), col("ts_ms"), col("event_type"))
-              .as[(Long, Long, Long, String)].collect()
-            val minTs = evs.iterator.map(_._3).min
-            val maxTs = evs.iterator.map(_._3).max
-            val lms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-            val rms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-            val left = lms.toDS().toDF("event_id", "user_id", "__lms")
-              .withColumn("l_ts", timestamp_millis(col("__lms")))
-            val right = rms.toDS().toDF("r_event_id", "r_user", "__rms")
-              .withColumn("r_ts", timestamp_millis(col("__rms")))
-            val joined = graft.streaming.StreamingJoin.leftJoinBuffered(
-              left, "l_ts", right, "r_ts", Seq(("user_id", "r_user")),
-              windowMs = 7L * 86400000L, watermarkMs = 3600000L)
-            val q = joined.select(col("event_id"), col("user_id"), col("r_event_id"))
-              .writeStream.format("noop").outputMode("append").start()
-            (q, () => {
-              val purchases = evs.filter(_._4 == "purchase").map(e => (e._1, e._2, e._3))
-              val signups = evs.filter(_._4 == "signup").map(e => (e._1, e._2, e._3))
-              val mid = minTs + (maxTs - minTs) / 2 + 1
-              Seq((minTs, mid), (mid, maxTs + 1)).foreach { case (lo, hi) =>
-                lms.addData(purchases.iterator.filter(e => e._3 >= lo && e._3 < hi).toSeq)
-                rms.addData(signups.iterator.filter(e => e._3 >= lo && e._3 < hi).toSeq)
-                q.processAllAvailable()
-              }
-              val flush = maxTs + 8L * 86400000L
-              lms.addData(Seq((-1L, -1L, flush)))
-              rms.addData(Seq((-1L, -1L, flush)))
-              q.processAllAvailable()
-            })
           case "streaming_dedup" =>
             // q_streaming_dedup shape: exact digest dedup, whole corpus in
             // batch 1, 10% byte-copies in batch 2 — state is one row per
             // distinct digest
-            val docs = spark.read.parquet(p)
-              .select(col("doc_id"), col("text"))
-              .where(col("text").isNotNull)
-              .as[(Long, String)].collect()
-            val maxId = docs.iterator.map(_._1).max
-            val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-            val out = graft.streaming.StreamingDedup.exact(
-              ms.toDS().toDF("doc_id", "text"), "text")
-            val q = out.writeStream.format("noop").outputMode("append").start()
+            val ds = docs(dir)
+            val maxId = ds.iterator.map(_._1).max
+            val ms = MemoryStream[(Long, String)]
+            val q = noop(graft.streaming.StreamingDedup.exact(
+              ms.toDS().toDF("doc_id", "text"), "text"))
             (q, () => {
-              ms.addData(docs.toSeq)
+              ms.addData(ds.toSeq)
               q.processAllAvailable()
-              ms.addData(docs.iterator.filter(_._1 % 10 == 0)
+              ms.addData(ds.iterator.filter(_._1 % 10 == 0)
                 .map(d => (maxId + 1 + d._1, d._2)).toSeq)
               q.processAllAvailable()
             })
@@ -743,48 +134,39 @@ object ScaleProbe {
             // machine, gate-row shapes (two corpus halves + 10% planted
             // copies): UNBOUNDED state tracks the corpus; the HORIZON form
             // holds only in-horizon (id, eventMillis) pairs and reclaims
-            // buckets once the watermark passes — the decade probe reports
-            // peak state rows/bytes beside wall, so the boundedness claim
-            // is MEASURED per scale, not just law-asserted at gate scale
-            // (r13 verdict #5)
-            val docs = spark.read.parquet(p)
-              .select(col("doc_id"), col("text"))
-              .where(col("text").isNotNull)
-              .as[(Long, String)].collect().sortBy(_._1)
-            val maxId = docs.iterator.map(_._1).max
-            val planted = docs.filter(_._1 % 10 == 0)
+            // buckets once the watermark passes
+            val ds = docs(dir).sortBy(_._1)
+            val maxId = ds.iterator.map(_._1).max
+            val planted = ds.filter(_._1 % 10 == 0)
               .map(d => (maxId + 1 + d._1, d._2)).toSeq
-            val half = docs.length / 2
+            val half = ds.length / 2
             if (name == "streaming_minhash") {
-              val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-              val out = graft.streaming.StreamingDedup.minhashCandidates(
+              val ms = MemoryStream[(Long, String)]
+              val q = noop(graft.streaming.StreamingDedup.minhashCandidates(
                 ms.toDS().toDF("doc_id", "text"), "text", "doc_id",
-                maxBucket = 8192)
-              val q = out.writeStream.format("noop").outputMode("append").start()
+                maxBucket = 8192))
               (q, () => {
-                ms.addData(docs.take(half).toSeq); q.processAllAvailable()
-                ms.addData(docs.drop(half).toSeq); q.processAllAvailable()
+                ms.addData(ds.take(half).toSeq); q.processAllAvailable()
+                ms.addData(ds.drop(half).toSeq); q.processAllAvailable()
                 ms.addData(planted); q.processAllAvailable()
               })
             } else {
-              def t(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-              val ms = org.apache.spark.sql.execution.streaming.runtime
-                .MemoryStream[(Long, java.sql.Timestamp, String)]
-              val out = graft.streaming.StreamingDedup.minhashCandidatesWithinHorizon(
+              def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
+              val ms = MemoryStream[(Long, java.sql.Timestamp, String)]
+              val q = noop(graft.streaming.StreamingDedup.minhashCandidatesWithinHorizon(
                 ms.toDS().toDF("doc_id", "ts", "text"), "text", "doc_id", "ts",
-                "10 minutes", maxBucket = 8192)
-              val q = out.writeStream.format("noop").outputMode("append").start()
+                "10 minutes", maxBucket = 8192))
               (q, () => {
-                ms.addData(docs.take(half).map(d => (d._1, t(100), d._2)).toSeq)
+                ms.addData(ds.take(half).map(d => (d._1, ts(100), d._2)).toSeq)
                 q.processAllAvailable()
-                ms.addData(docs.drop(half).map(d => (d._1, t(200), d._2)).toSeq)
+                ms.addData(ds.drop(half).map(d => (d._1, ts(200), d._2)).toSeq)
                 q.processAllAvailable()
-                ms.addData(planted.map(pl => (pl._1, t(300), pl._2)))
+                ms.addData(planted.map(pl => (pl._1, ts(300), pl._2)))
                 q.processAllAvailable()
                 // advance the watermark past the horizon: eviction work is
                 // part of the bounded form's honest wall cost, and the
                 // PEAK state across triggers is what the probe reports
-                ms.addData((maxId * 4 + 1, t(100000), "watermark advancing filler text"))
+                ms.addData((maxId * 4 + 1, ts(100000), "watermark advancing filler text"))
                 q.processAllAvailable()
               })
             }
@@ -793,17 +175,16 @@ object ScaleProbe {
             // 10% user slice, two ascending-ts halves + a flush sentinel —
             // state is one MERGING session per open (user, session), so
             // final state after the flush is the boundedness measurement
-            val evs = spark.read.parquet(p)
+            val evs = eventsDF(spark, dir)
               .where(col("user_id") % 10 === 0)
               .select(col("user_id"), col("ts_ms")).as[(Long, Long)].collect()
             val minTs = evs.iterator.map(_._2).min
             val maxTs = evs.iterator.map(_._2).max
-            val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-            val out = graft.operators.Sessionize.sessionizeStreaming(
+            val ms = MemoryStream[(Long, Long)]
+            val q = noop(graft.operators.Sessionize.sessionizeStreaming(
               ms.toDS().toDF("user_id", "__ms")
                 .withColumn("ts", timestamp_millis(col("__ms"))),
-              "user_id", "ts", gapMs = 1800000L)
-            val q = out.writeStream.format("noop").outputMode("append").start()
+              "user_id", "ts", gapMs = 1800000L))
             (q, () => {
               val mid = minTs + (maxTs - minTs) / 2 + 1
               Seq((minTs, mid), (mid, maxTs + 1)).foreach { case (lo, hi) =>
@@ -818,150 +199,52 @@ object ScaleProbe {
         try {
           feed()
           // PEAK state across the run's micro-batches (the last trigger can
-          // be post-watermark-eviction — e.g. the join's flush sentinel —
-          // which would under-report the working-set the state store
-          // carried) PLUS the FINAL trigger's state: for horizon-bounded
-          // machines the final number is the boundedness measurement (what
-          // survives the watermark), while unbounded machines end where
-          // they peaked
+          // be post-watermark-eviction, which would under-report the
+          // working set the state store carried) PLUS the FINAL trigger's
+          // state: for horizon-bounded machines the final number is the
+          // boundedness measurement (what survives the watermark), while
+          // unbounded machines end where they peaked
           val progs = q.recentProgress.filter(_.stateOperators.nonEmpty)
-          val stateRows =
-            if (progs.isEmpty) -1L
-            else progs.map(_.stateOperators.map(_.numRowsTotal).sum).max
-          val stateMem =
-            if (progs.isEmpty) -1L
-            else progs.map(_.stateOperators.map(_.memoryUsedBytes).sum).max
-          val finalRows =
-            if (progs.isEmpty) -1L
-            else progs.last.stateOperators.map(_.numRowsTotal).sum
-          val finalMem =
-            if (progs.isEmpty) -1L
-            else progs.last.stateOperators.map(_.memoryUsedBytes).sum
-          (0.0, stateRows, stateMem, finalRows, finalMem)
+          if (progs.isEmpty) (-1L, -1L, -1L, -1L)
+          else (progs.map(_.stateOperators.map(_.numRowsTotal).sum).max,
+            progs.map(_.stateOperators.map(_.memoryUsedBytes).sum).max,
+            progs.last.stateOperators.map(_.numRowsTotal).sum,
+            progs.last.stateOperators.map(_.memoryUsedBytes).sum)
         } finally q.stop()
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
-        savedProv match {
-          case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-          case None    => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        savedExtra.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None)    => spark.conf.unset(k)
-        }
       }
-    }
-    def timedStreamProbe(name: String, parts: Int, p: String,
-        provider: String, extra: Map[String, String] = Map.empty): (Double, Long, Long, Long, Long) = {
+    def timed[A](f: => A): (Double, A) = {
       val t0 = System.nanoTime()
-      val (_, rows, mem, fRows, fMem) = streamProbe(name, parts, p, provider, extra)
-      ((System.nanoTime() - t0) / 1e9, rows, mem, fRows, fMem)
-    }
-    val streamNames = Seq("streaming_sum", "streaming_join", "streaming_dedup")
-      .filter(n => opsArg.forall(_.contains(n)))
-    if (streamNames.nonEmpty) {
-      // one discarded warm run per provider pays the one-time codepaths
-      streamProbe("streaming_sum", 4, ev1, hdfsProvider)
-      streamProbe("streaming_sum", 4, ev1, rocksProvider)
-      for (name <- streamNames; parts <- Seq(4, 32);
-           (provLabel, prov) <- Seq(("hdfs", hdfsProvider), ("rocksdb", rocksProvider))) {
-        val (p1, pN) = if (name == "streaming_dedup") (docs1, docsN) else (ev1, evN)
-        val (t1, r1, m1, _, _) = timedStreamProbe(name, parts, p1, prov)
-        val (tN, rN, mN, _, _) = timedStreamProbe(name, parts, pN, prov)
-        println(f"PROBE $name%-16s parts=$parts%-3d store=$provLabel%-8s " +
-          f"1x=${t1}%.2fs ${factor}x=${tN}%.2fs ratio=${tN / t1}%.2f " +
-          f"stateRows=${r1}->${rN} stateMB=${m1 / 1e6}%.1f->${mN / 1e6}%.1f")
-      }
-    }
-    // round-14 (minhash) + round-15 (all four machines, r14 verdict #8):
-    // the streaming-state decade probe at the gate's streaming conf
-    // (4 state partitions, RocksDB), reporting PEAK and FINAL state
-    // rows/bytes beside wall — one artifact, final-state curves for every
-    // state machine, so each one's boundedness story is a measured number
-    // at every scale (sum: keyed (user, day) rows that stay until the TTL;
-    // dedup: one row per distinct digest — unbounded by design, the
-    // documented trade; sessionize: merging sessions that EVICT on the
-    // watermark — final ≈ the flush sentinel's session; minhash: both
-    // regimes as before)
-    // ops token "decades" selects ALL five arms here and nothing else
-    // (streaming_sum/streaming_dedup by bare name would also trigger the
-    // round-9 multi-partition/provider sweep above)
-    val decadeNames = Seq("streaming_minhash", "streaming_minhash_horizon",
-        "streaming_sum", "streaming_sum_horizon", "streaming_dedup",
-        "streaming_sessionize")
-      .filter(n => opsArg.forall(o => o.contains(n) || o.contains("decades")))
-    if (decadeNames.nonEmpty) {
-      def decadeInputs(name: String): (String, String) =
-        if (name.contains("minhash") || name == "streaming_dedup") (docs1, docsN)
-        else (ev1, evN)
-      decadeNames.foreach { name =>
-        val (p1, pN) = decadeInputs(name)
-        // warm THE ARM BEING TIMED: each machine has its own one-time
-        // codegen/state-provider costs, and billing them to t1 would
-        // deflate every published tN/t1 decade ratio
-        streamProbe(name, 4, p1, rocksProvider)
-        val (t1, r1, m1, f1, fm1) = timedStreamProbe(name, 4, p1, rocksProvider)
-        val (tN, rN, mN, fN, fmN) = timedStreamProbe(name, 4, pN, rocksProvider)
-        println(f"PROBE $name%-26s parts=4 store=rocksdb " +
-          f"1x=${t1}%.2fs ${factor}x=${tN}%.2fs ratio=${tN / t1}%.2f " +
-          f"peakRows=${r1}->${rN} peakMB=${m1 / 1e6}%.2f->${mN / 1e6}%.2f " +
-          f"finalRows=${f1}->${fN} finalMB=${fm1 / 1e6}%.2f->${fmN / 1e6}%.2f")
-      }
+      val a = f
+      ((System.nanoTime() - t0) / 1e9, a)
     }
 
-    // round-10: RocksDB HARD memory cap — boundedMemoryUsage pins the
-    // memtable + block cache under maxMemoryUsageMB across ALL state store
-    // instances on the executor; the probe shows the biggest-state machine
-    // (streaming_sum at factor-x keys) stays green with memory reported
-    // under the cap, i.e. resident state memory is a CONFIG knob, not a
-    // function of key count — the 100M-key story
-    if (opsArg.forall(_.contains("rocksdb_bounded"))) {
-      val cap = Map(
-        "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" -> "true",
-        "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB" -> "64")
-      streamProbe("streaming_sum", 4, ev1, rocksProvider, cap) // warm
-      val (t1, r1, m1, _, _) = timedStreamProbe("streaming_sum", 4, ev1, rocksProvider, cap)
-      val (tN, rN, mN, _, _) = timedStreamProbe("streaming_sum", 4, evN, rocksProvider, cap)
-      println(f"PROBE rocksdb_bounded cap=64MB 1x=${t1}%.2fs ${factor}x=${tN}%.2fs " +
-        f"stateRows=${r1}->${rN} stateMB=${m1 / 1e6}%.1f->${mN / 1e6}%.1f")
+    // "decades" selects every machine; a machine's own name selects it alone
+    machines.filter(n => opsArg.forall(o => o(n) || o("decades"))).foreach { name =>
+      // warm THE ARM BEING TIMED: each machine has its own one-time
+      // codegen/state-provider costs, and billing them to the 1x run would
+      // deflate every published scaled/1x ratio
+      streamProbe(name, baseDir)
+      val (t1, (r1, m1, f1, fm1)) = timed(streamProbe(name, baseDir))
+      val (tN, (rN, mN, fN, fmN)) = timed(streamProbe(name, scaledDir))
+      println(f"PROBE $name%-26s parts=4 store=rocksdb " +
+        f"1x=${t1}%.2fs Nx=${tN}%.2fs ratio=${tN / t1}%.2f " +
+        f"peakRows=${r1}->${rN} peakMB=${m1 / 1e6}%.2f->${mN / 1e6}%.2f " +
+        f"finalRows=${f1}->${fN} finalMB=${fm1 / 1e6}%.2f->${fmN / 1e6}%.2f")
     }
 
-    // round-10: incremental NSW insert vs full rebuild — the daily-ingest
-    // cost story for the ANN index: insert a 10% append-only batch into a
-    // prebuilt (checkpointed) index and compare against rebuilding over
-    // the union. Per-shard insert work is O(|new| · efC · degree); the
-    // rebuild pays that for EVERY vector.
-    if (opsArg.forall(_.contains("nsw_incr"))) {
-      import graft.operators.Similarity
-      // the factor-x table: at sf0.1 the base corpus is small enough that
-      // task overhead hides the work ratio; the scaled corpus puts real
-      // graph construction in both timed windows
-      val e1 = spark.read.parquet(embN)
-      val newBatch = e1.where(col("vec_id") % 10 === 0)
-        .withColumn("vec_id", col("vec_id") + lit(1000000000L))
-      val idx = Similarity.nswBuild(e1, "embedding", "vec_id").localCheckpoint(true)
-      idx.count() // materialize the day-1 index outside any timed window
-      val tIns = time(Similarity.nswInsertAgainst(idx, newBatch, "embedding", "vec_id")
-        .agg(sum(size(col("nbr_ids")))).collect().head.getLong(0))
-      val tReb = time(Similarity.nswBuild(e1.unionByName(newBatch), "embedding", "vec_id")
-        .agg(sum(size(col("nbr_ids")))).collect().head.getLong(0))
-      println(f"PROBE nsw_incr insert10pct=${tIns}%.2fs rebuild=${tReb}%.2fs " +
-        f"ratio=${tIns / tReb}%.2f")
-    }
-
-    // round-17 (r16 verdict #7): stored-index READ amplification over many
-    // append generations — the one unmeasured scale axis. A daily-ingest
-    // store accumulates one graphdelta segment per batch; reads pay the
-    // LWW fold over every live segment until a compaction folds them.
-    // This arm stacks `gens` delta appends on a stored NSW index over the
-    // factor-x embeddings and reports serve wall at segment-count
-    // checkpoints, then the compaction cost and the post-compaction serve
-    // — the read-amplification-vs-write-cost trade as a measured curve,
-    // with the compactIfFragmented default (maxSegments=8) sitting on it.
-    if (opsArg.forall(_.contains("stored_read_amp"))) {
+    // stored-index READ amplification over many append generations. A
+    // daily-ingest store accumulates one graphdelta segment per batch;
+    // reads pay the LWW fold over every live segment until a compaction
+    // folds them. This arm stacks `gens` delta appends on a stored NSW
+    // index over the scaled embeddings and reports serve wall at
+    // segment-count checkpoints, then the compaction cost and the
+    // post-compaction serve — the read-amplification-vs-write-cost trade
+    // as a measured curve, with the compactIfFragmented default
+    // (maxSegments=8) sitting on it.
+    if (opsArg.forall(_("stored_read_amp"))) {
       import graft.operators.Similarity
       import graft.batch.SegmentedStore
-      val e = spark.read.parquet(embN)
+      val e = graft.GateHelpers.t(spark, scaledDir, "embeddings").select("vec_id", "embedding")
       // 95% base corpus; the other 5% becomes `gens` append batches with
       // fresh ids ABOVE the base (the append-only ingest shape)
       val base = e.where(col("vec_id") % 20 =!= 0)
@@ -970,359 +253,40 @@ object ScaleProbe {
         .withColumn("vec_id", col("vec_id") + lit(2000000000L))
         .withColumn("__g", pmod(xxhash64(col("vec_id")), lit(gens)))
         .localCheckpoint(true)
-      val dir = s"$scratch/read_amp_idx"
-      Similarity.nswWriteIndex(
-        Similarity.nswBuild(base, "embedding", "vec_id"), dir)
-      val q = Array.tabulate(64)(i => math.sin(i + 1.0))
-      def readWall(): Double = time(
-        Similarity.nswSearchBuilt(Similarity.readNswIndex(spark, dir),
-            "embedding", "vec_id", q, k = 10)
-          .agg(sum(col("vec_id"))).collect().head.getLong(0))
-      println(f"PROBE stored_read_amp gens=0  segs=1 read=${readWall()}%.2fs")
-      val marks = Set(1, 2, 4, 8, 16, 32)
-      var appendWall = 0.0
-      for (g <- 0 until gens) {
-        val batch = pool.where(col("__g") === g).select("vec_id", "embedding")
-        val t0 = System.nanoTime()
-        Similarity.nswAppendToStored(spark, dir, batch, "embedding", "vec_id")
-        appendWall += (System.nanoTime() - t0) / 1e9
-        if (marks(g + 1)) {
-          val segs = SegmentedStore.committedSegs(dir).size
-          println(f"PROBE stored_read_amp gens=${g + 1}%-2d segs=$segs " +
-            f"read=${readWall()}%.2fs appendWallCum=${appendWall}%.2fs")
+      val dir = java.nio.file.Files.createTempDirectory("graft_probe_read_amp_").toString
+      try {
+        Similarity.nswWriteIndex(
+          Similarity.nswBuild(base, "embedding", "vec_id"), dir)
+        val q = Array.tabulate(64)(i => math.sin(i + 1.0))
+        def readWall(): Double = {
+          def read(): Long =
+            Similarity.nswSearchBuilt(Similarity.readNswIndex(spark, dir),
+                "embedding", "vec_id", q, k = 10)
+              .agg(sum(col("vec_id"))).collect().head.getLong(0)
+          read() // warm
+          timed(read())._1
         }
-      }
-      val tc0 = System.nanoTime()
-      Similarity.nswCompactStored(spark, dir, "embedding", "vec_id")
-      val tCompact = (System.nanoTime() - tc0) / 1e9
-      println(f"PROBE stored_read_amp compacted segs=" +
-        f"${SegmentedStore.committedSegs(dir).size} read=${readWall()}%.2fs " +
-        f"compact=${tCompact}%.2fs appendWallTotal=${appendWall}%.2fs " +
-        "(compactIfFragmented default maxSegments=8)")
-    }
-
-    // round-18 (r17 verdict #3): pruned-probe recall and scan cost vs
-    // APPENDED MASS under a frozen coarse quantizer — the measured WHEN
-    // behind "retraining = rebuild". Two stores over the same base
-    // corpus, three frozen-centroid append generations each:
-    //   indist — appends drawn from the same organic distribution family
-    //     (Organic.embeddings): the benign case, the frozen centroids
-    //     still cover the data;
-    //   skewed — the same append volume concentrated around ONE novel
-    //     direction the training never saw: every vector assigns to the
-    //     same frozen cell (the q_ivf_drift gate row's shape, at probe
-    //     scale with organic growth).
-    // Each step reports the cheap cellstats signals (occupancy imbalance,
-    // appended-mass fraction, warn flag) BESIDE the expensive symptoms
-    // they are supposed to predict: recall@10 of the pruned query-table
-    // serve vs brute force over the live corpus, the mean per-query
-    // scored-row fraction (the real per-query scan cost of the one-scan
-    // join — for hot-region queries under skew, the probed cell holds a
-    // growing share of the store, so the pruning lever decays toward a
-    // full scan), and the serve wall. The claim under test: the warning
-    // fires before/with the symptom curve, so it is an actionable retrain
-    // trigger rather than decoration.
-    if (opsArg.forall(_.contains("ivf_drift"))) {
-      import graft.operators.Similarity
-      val e0 = spark.read.parquet(emb1)
-      val n0 = e0.count()
-      // organic pool: 3 append slices of n0 rows each + 16 held-out queries
-      val all = Organic.embeddings(spark, embsRaw, 5)
-        .select(col("vec_id"), col("embedding")).localCheckpoint(true)
-      def slice(g: Int): DataFrame =
-        all.where(col("vec_id") >= n0 * (g + 1) && col("vec_id") < n0 * (g + 2))
-      val heldOut = all.where(col("vec_id") >= n0 * 4).limit(16)
-        .localCheckpoint(true)
-      // pull toward one novel direction: unit-norm input v becomes
-      // ~normalize(dir + 0.05 v) — within a few degrees of dir, so the
-      // frozen argmax sends every row to dir's cell
-      val dim = e0.selectExpr("size(embedding) AS d").head().getInt(0)
-      val dirVec = {
-        val raw = Array.tabulate(dim)(i => math.cos(i / 3.0))
-        val n = math.sqrt(raw.map(x => x * x).sum)
-        raw.map(_ / n)
-      }
-      def skew(df: DataFrame): DataFrame = df
-        .withColumn("vec_id", col("vec_id") + lit(10000000000L))
-        .withColumn("embedding",
-          transform(col("embedding"), (x, i) =>
-            (element_at(typedLit(dirVec.toSeq), i + 1) + x * 0.05).cast("float")))
-      def qTable(df: DataFrame): DataFrame =
-        df.select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-
-      def topIds(df: DataFrame): Map[Long, Set[Long]] =
-        df.select(col("q_id"), col("vec_id")).collect()
-          .groupBy(_.getLong(0)).map { case (q, rs) =>
-            q -> rs.map(_.getLong(1)).toSet }
-
-      def report(arm: String, step: Int, dir: String, live: DataFrame,
-          queries: DataFrame): Unit = {
-        val st = Similarity.ivfDriftStats(spark, dir).collect().head
-        val frac = st.getAs[Double]("appended_mass_fraction")
-        val imb = st.getAs[Double]("occ_imbalance")
-        val warn = st.getAs[Boolean]("drift_warn")
-        val total = st.getAs[Long]("occupied_rows")
-        val cents = Similarity.readIvfCentroids(spark, dir)
-        // occupancy mass inside each query's OWN probe cells / total —
-        // the rows the one-scan join scores for that query (cellstats
-        // arithmetic, no scan)
-        val occ = Similarity.ivfCellOccupancy(spark, dir).collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
-        val qProbes = queries.collect()
-          .map(_.getSeq[Float](1).map(_.toDouble).toArray)
-          .map(Similarity.ivfProbeCids(_, cents, 4))
-        val meanScanFrac = qProbes.map(ps =>
-          ps.map(occ.getOrElse(_, 0L)).sum.toDouble / total.max(1L))
-          .sum / qProbes.length.max(1)
-        val t0 = System.nanoTime()
-        val got = topIds(Similarity.ivfTopKStoredJoin(spark, dir, live,
-          "embedding", "vec_id", queries, "q_vec", "q_id", k = 10, nProbe = 4))
-        val wall = (System.nanoTime() - t0) / 1e9
-        val truth = topIds(Similarity.bruteForceTopKJoin(live, "embedding",
-          "vec_id", queries, "q_vec", "q_id", k = 10))
-        val recall = truth.map { case (q, ids) =>
-          got.getOrElse(q, Set.empty).intersect(ids).size / 10.0
-        }.sum / truth.size.max(1)
-        println(f"PROBE ivf_drift arm=$arm%-6s step=$step rows=$total " +
-          f"appendedFrac=${frac}%.3f imb=${imb}%.2f warn=$warn%-5s " +
-          f"recall10=${recall}%.3f meanQueryScanFrac=${meanScanFrac}%.3f " +
-          f"serveJoin16=${wall}%.2fs")
-      }
-
-      for ((arm, prep) <- Seq[(String, DataFrame => DataFrame)](
-          "indist" -> (df => df),
-          "skewed" -> (df => skew(df)))) {
-        val dir = s"$scratch/ivf_drift_$arm"
-        Similarity.ivfWriteIndex(e0.select(col("vec_id"), col("embedding")),
-          "embedding", "vec_id", dir, nCentroids = 16)
-        // queries probe the region the arm's appends land in
-        val queries = qTable(prep(heldOut)).localCheckpoint(true)
-        var live = e0.select(col("vec_id"), col("embedding"))
-          .localCheckpoint(true)
-        report(arm, 0, dir, live, queries)
-        for (g <- 0 until 3) {
-          val batch = prep(slice(g)).localCheckpoint(true)
-          Similarity.ivfAppendToStored(spark, dir, batch, "embedding", "vec_id")
-          live = live.unionByName(batch).localCheckpoint(true)
-          report(arm, g + 1, dir, live, queries)
+        println(f"PROBE stored_read_amp gens=0  segs=1 read=${readWall()}%.2fs")
+        val marks = Set(1, 2, 4, 8, 16, 32)
+        var appendWall = 0.0
+        for (g <- 0 until gens) {
+          val batch = pool.where(col("__g") === g).select("vec_id", "embedding")
+          appendWall += timed(
+            Similarity.nswAppendToStored(spark, dir, batch, "embedding", "vec_id"))._1
+          if (marks(g + 1)) {
+            val segs = SegmentedStore.committedSegs(dir).size
+            println(f"PROBE stored_read_amp gens=${g + 1}%-2d segs=$segs " +
+              f"read=${readWall()}%.2fs appendWallCum=${appendWall}%.2fs")
+          }
         }
-        // the documented repair, measured: the warning's prescription is
-        // "retraining = rebuild from the float corpus" — rebuild over the
-        // LIVE corpus (fresh centroids see the drifted mass) and report
-        // the same row, so the signal → action → repaired loop closes in
-        // one artifact (recall restored, occupancy re-balanced, appended
-        // fraction reset)
-        val trb = System.nanoTime()
-        Similarity.ivfWriteIndex(live, "embedding", "vec_id", dir,
-          nCentroids = 16)
-        println(f"PROBE ivf_drift arm=$arm%-6s rebuild=" +
-          f"${(System.nanoTime() - trb) / 1e9}%.2fs")
-        report(arm, 4, dir, live, queries)
-      }
+        val (tCompact, _) = timed(
+          Similarity.nswCompactStored(spark, dir, "embedding", "vec_id"))
+        println(f"PROBE stored_read_amp compacted segs=" +
+          f"${SegmentedStore.committedSegs(dir).size} read=${readWall()}%.2fs " +
+          f"compact=${tCompact}%.2fs appendWallTotal=${appendWall}%.2fs " +
+          "(compactIfFragmented default maxSegments=8)")
+      } finally graft.batch.BatchState.deleteDir(dir)
     }
-
-    // round-18: the IVF geometry lever, measured. A pruned serve scans the
-    // MASS of the probed cells, so at FIXED nCentroids it is linear in
-    // corpus size (the r18 100x batch tail reads q_ann_ivf_stored's
-    // serve_pruned at 11x its 1x for exactly this reason, while the
-    // m-ints-per-row IVF-PQ row stays flat). The production configuration
-    // scales nCentroids with the corpus (FAISS practice ~sqrt(N) cells,
-    // constant probe fraction of a constant-size cell); this arm builds
-    // the SAME corpus at increasing cell counts and reports probed-mass
-    // fraction, measured recall@10 (vs brute force, 16 held-out queries),
-    // build wall (the cost that grows with nCentroids — driver-side Lloyd
-    // on a bounded sample + one heavier assignment projection), and the
-    // pruned query-table serve wall. Run it against an already-scaled
-    // directory (e.g. MakeScale organic 100x) — it reads the BASE tables.
-    if (opsArg.forall(_.contains("ivf_cells"))) {
-      import graft.operators.Similarity
-      val e0 = spark.read.parquet(emb1)
-      val n0 = e0.count()
-      val all = Organic.embeddings(spark, embsRaw, 2)
-        .select(col("vec_id"), col("embedding")).localCheckpoint(true)
-      val queries = all.where(col("vec_id") >= n0).limit(16)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-        .localCheckpoint(true)
-      def topIds(df: DataFrame): Map[Long, Set[Long]] =
-        df.select(col("q_id"), col("vec_id")).collect()
-          .groupBy(_.getLong(0)).map { case (q, rs) =>
-            q -> rs.map(_.getLong(1)).toSet }
-      val truth = topIds(Similarity.bruteForceTopKJoin(e0, "embedding",
-        "vec_id", queries, "q_vec", "q_id", k = 10))
-      for ((nc, np) <- Seq((16, 4), (64, 8), (256, 16))) {
-        val dir = s"$scratch/ivf_cells_$nc"
-        val tb0 = System.nanoTime()
-        Similarity.ivfWriteIndex(e0, "embedding", "vec_id", dir, nCentroids = nc)
-        val buildWall = (System.nanoTime() - tb0) / 1e9
-        val cents = Similarity.readIvfCentroids(spark, dir)
-        val occ = Similarity.ivfCellOccupancy(spark, dir).collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
-        val qVecs = queries.collect()
-          .map(_.getSeq[Float](1).map(_.toDouble).toArray)
-        val qProbes = qVecs.map(Similarity.ivfProbeCids(_, cents, np))
-        // per-query scored mass — the rows ONE query pays to rank; the
-        // 100 TB cost unit of both the point serve and the join's scoring
-        val meanScanFrac = qProbes.map(ps =>
-          ps.map(occ.getOrElse(_, 0L)).sum.toDouble / n0.max(1L))
-          .sum / qProbes.length.max(1)
-        // shared union-scan mass — what the 16-query JOIN reads once; a
-        // diverse query table's probe union covers more of a finer store,
-        // so the join's win is in SCORED rows, not the shared read
-        val unionFrac = qProbes.flatten.distinct
-          .map(occ.getOrElse(_, 0L)).sum.toDouble / n0.max(1L)
-        def serveOnce(): Map[Long, Set[Long]] =
-          topIds(Similarity.ivfTopKStoredJoin(spark, dir, e0, "embedding",
-            "vec_id", queries, "q_vec", "q_id", k = 10, nProbe = np))
-        serveOnce() // warm
-        val ts0 = System.nanoTime()
-        val got = serveOnce()
-        val serveWall = (System.nanoTime() - ts0) / 1e9
-        // the point-serve path (one probe, one pruned scan) at the same
-        // geometry — the shape q_ann_ivf_stored's serve_pruned measures
-        Similarity.ivfTopKStored(spark, dir, e0, "embedding", "vec_id",
-          qVecs.head, k = 10, nProbe = np).count() // warm
-        val tp0 = System.nanoTime()
-        Similarity.ivfTopKStored(spark, dir, e0, "embedding", "vec_id",
-          qVecs.head, k = 10, nProbe = np).count()
-        val pointWall = (System.nanoTime() - tp0) / 1e9
-        val recall = truth.map { case (q, ids) =>
-          got.getOrElse(q, Set.empty).intersect(ids).size / 10.0
-        }.sum / truth.size.max(1)
-        println(f"PROBE ivf_cells nCells=$nc%-3d nProbe=$np%-2d rows=$n0 " +
-          f"build=${buildWall}%.2fs meanQueryScanFrac=${meanScanFrac}%.3f " +
-          f"unionScanFrac=${unionFrac}%.3f recall10=${recall}%.3f " +
-          f"serveJoin16=${serveWall}%.2fs servePoint=${pointWall}%.2fs")
-      }
-    }
-
-    // ivf_auto (round 19, r18 verdict #3): the ivf_cells ladder measured
-    // the geometry rule; this arm measures the DEFAULT — ivfWriteIndex
-    // with no nCentroids resolves suggestedIvfCells(N) — at whatever
-    // corpus the directory holds. Point it at a 1x dir and a MakeScale
-    // 100x dir: the pair is the evidence that the auto-built pruned
-    // serve's scale curve stays flat-ish (the fixed-16 default read 8.6x
-    // at 100x in the r18 artifact; the rule exists to kill exactly
-    // that). nProbe scales as sqrt(nCells), the ivf_cells ladder's
-    // matched-recall line (4@16, 8@64, 16@256).
-    if (opsArg.exists(_.contains("ivf_auto"))) {
-      import graft.operators.Similarity
-      val e0 = spark.read.parquet(emb1)
-      val n0 = e0.count()
-      val all = Organic.embeddings(spark, embsRaw, 2)
-        .select(col("vec_id"), col("embedding")).localCheckpoint(true)
-      val queries = all.where(col("vec_id") >= n0).limit(16)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-        .localCheckpoint(true)
-      def topIds(df: DataFrame): Map[Long, Set[Long]] =
-        df.select(col("q_id"), col("vec_id")).collect()
-          .groupBy(_.getLong(0)).map { case (q, rs) =>
-            q -> rs.map(_.getLong(1)).toSet }
-      val truth = topIds(Similarity.bruteForceTopKJoin(e0, "embedding",
-        "vec_id", queries, "q_vec", "q_id", k = 10))
-      val dir = s"$scratch/ivf_auto"
-      val tb0 = System.nanoTime()
-      Similarity.ivfWriteIndex(e0, "embedding", "vec_id", dir) // AUTO
-      val buildWall = (System.nanoTime() - tb0) / 1e9
-      val cents = Similarity.readIvfCentroids(spark, dir)
-      val nc = cents.length
-      val np = math.max(4, math.round(math.sqrt(nc.toDouble)).toInt)
-      val occ = Similarity.ivfCellOccupancy(spark, dir).collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val qVecs = queries.collect()
-        .map(_.getSeq[Float](1).map(_.toDouble).toArray)
-      val qProbes = qVecs.map(Similarity.ivfProbeCids(_, cents, np))
-      val meanScanFrac = qProbes.map(ps =>
-        ps.map(occ.getOrElse(_, 0L)).sum.toDouble / n0.max(1L))
-        .sum / qProbes.length.max(1)
-      def serveOnce(): Map[Long, Set[Long]] =
-        topIds(Similarity.ivfTopKStoredJoin(spark, dir, e0, "embedding",
-          "vec_id", queries, "q_vec", "q_id", k = 10, nProbe = np))
-      serveOnce() // warm
-      val ts0 = System.nanoTime()
-      val got = serveOnce()
-      val serveWall = (System.nanoTime() - ts0) / 1e9
-      Similarity.ivfTopKStored(spark, dir, e0, "embedding", "vec_id",
-        qVecs.head, k = 10, nProbe = np).count() // warm
-      val tp0 = System.nanoTime()
-      Similarity.ivfTopKStored(spark, dir, e0, "embedding", "vec_id",
-        qVecs.head, k = 10, nProbe = np).count()
-      val pointWall = (System.nanoTime() - tp0) / 1e9
-      val recall = truth.map { case (q, ids) =>
-        got.getOrElse(q, Set.empty).intersect(ids).size / 10.0
-      }.sum / truth.size.max(1)
-      println(f"PROBE ivf_auto nCells=$nc%-4d nProbe=$np%-2d rows=$n0 " +
-        f"build=${buildWall}%.2fs meanQueryScanFrac=${meanScanFrac}%.4f " +
-        f"recall10=${recall}%.3f serveJoin16=${serveWall}%.2fs " +
-        f"servePoint=${pointWall}%.2fs")
-    }
-
-    // graph_health (round 19, r18 verdict #4's measured WHEN): the graph
-    // tiers' analogue of the ivf_drift probe — the health row's
-    // tombstone-fraction warning must fire BEFORE the degradation it
-    // predicts is catastrophic, and the prescribed repair (compaction)
-    // must measurably restore the serve. Steps: cumulative takedowns at
-    // 10% / 30% / 50% of the corpus; at each step the health row (frac,
-    // warn), the 16-query serve wall over the stored graph (tombstoned
-    // nodes still route — the serve pays full-graph beam cost for
-    // live-only results), and recall@10 vs brute force over the LIVE
-    // rows. Then compaction: health must read clean and the serve must
-    // speed up (the graph is now half the size).
-    if (opsArg.exists(_.contains("graph_health"))) {
-      import graft.operators.Similarity
-      val e0 = spark.read.parquet(emb1)
-        .select(col("vec_id"), col("embedding")).localCheckpoint(true)
-      val n0 = e0.count()
-      val dir = s"$scratch/graph_health"
-      val tb0 = System.nanoTime()
-      Similarity.nswWriteIndex(
-        Similarity.nswBuild(e0, "embedding", "vec_id"), dir)
-      val buildWall = (System.nanoTime() - tb0) / 1e9
-      val queries = Organic.embeddings(spark, embsRaw, 2)
-        .where(col("vec_id") >= n0).limit(16)
-        .select(col("vec_id"), col("embedding")).collect()
-        .map(_.getSeq[Float](1).map(_.toDouble).toArray)
-      def report(step: String, livePred: org.apache.spark.sql.Column): Unit = {
-        val h = Similarity.graphHealthStats(spark, dir).collect().head
-        val idx = Similarity.readNswIndex(spark, dir).localCheckpoint(true)
-        val live = e0.where(livePred).localCheckpoint(true)
-        def serveOnce(): Double = {
-          val t0 = System.nanoTime()
-          queries.foreach(q =>
-            Similarity.nswSearchBuilt(idx, "embedding", "vec_id", q, 10).count())
-          (System.nanoTime() - t0) / 1e9
-        }
-        serveOnce() // warm
-        val serveWall = serveOnce()
-        val recall = queries.map { q =>
-          val truth = Similarity.bruteForceTopK(live, "embedding", "vec_id",
-            q, 10).select("vec_id").collect().map(_.getLong(0)).toSet
-          val got = Similarity.nswSearchBuilt(idx, "embedding", "vec_id",
-            q, 10).select("vec_id").collect().map(_.getLong(0)).toSet
-          truth.intersect(got).size / math.max(1, truth.size).toDouble
-        }.sum / queries.length
-        println(f"PROBE graph_health step=$step%-12s rows=$n0 " +
-          f"live=${h.getAs[Long]("live_rows")} " +
-          f"frac=${h.getAs[Double]("tombstone_fraction")}%.3f " +
-          f"warn=${h.getAs[Boolean]("health_warn")} " +
-          f"serve16=${serveWall}%.2fs recall10=${recall}%.3f")
-      }
-      report("clean", lit(true))
-      for (pct <- Seq(1, 3, 5)) {
-        // cumulative: vec_id % 10 < pct — each step extends the victim set
-        Similarity.nswDeleteFromStored(spark, dir,
-          e0.where(col("vec_id") % 10 < pct).select("vec_id"))
-        report(s"takedown_${pct}0pct", col("vec_id") % 10 >= pct)
-      }
-      val tc0 = System.nanoTime()
-      Similarity.nswCompactStored(spark, dir, "embedding", "vec_id")
-      val compactWall = (System.nanoTime() - tc0) / 1e9
-      println(f"PROBE graph_health compact=${compactWall}%.2fs build=${buildWall}%.2fs")
-      report("compacted", col("vec_id") % 10 >= 5)
-    }
-
     spark.stop()
-    // the scratch copies are factor-x the sf inputs — don't leak them
-    // into /tmp across probe invocations
-    graft.batch.BatchState.deleteDir(scratch)
   }
 }

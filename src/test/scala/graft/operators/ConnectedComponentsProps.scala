@@ -4,12 +4,11 @@ import org.scalacheck.{Gen, Prop, Properties, Test}
 
 import graft.SparkTestSession
 
-/** ScalaCheck laws for the two connected-components algorithms against a
+/** ScalaCheck laws for star-contraction connected components against a
   * driver-side union-find model: for ARBITRARY edge lists (including
   * self-loops, duplicates, both orientations, disconnected islands,
-  * chains) star contraction and min-label propagation must both return
-  * exactly the model's (node → component-minimum) map, and star
-  * contraction must report convergence within its default round budget.
+  * chains) it must return exactly the model's (node → component-minimum)
+  * map and report convergence within its default round budget.
   */
 object ConnectedComponentsProps extends Properties("ConnectedComponents") {
   private lazy val spark = SparkTestSession.spark
@@ -40,17 +39,15 @@ object ConnectedComponentsProps extends Properties("ConnectedComponents") {
     parent.keys.toList.map(x => x -> find(x)).toMap
   }
 
-  property("star == min-label == union-find model; star converges") =
+  property("star == union-find model; star converges") =
     Prop.forAll(genEdges) { edges =>
       val s = spark; import s.implicits._
       val pairs = edges.toDF("id_a", "id_b")
       val m = model(edges)
       val star = Dedup.connectedComponentsStarDetailed(pairs, "id_a", "id_b", "id")
       val starMap = star.components.as[(Long, Long)].collect().toMap
-      val mlMap = Dedup.connectedComponents(pairs, "id_a", "id_b", "id")
-        .as[(Long, Long)].collect().toMap
-      // both algorithms list every node appearing in a pair (self-loops
-      // included — a self-loop still names its node), labeled by the min
+      // every node appearing in a pair is listed (self-loops included — a
+      // self-loop still names its node), labeled by the min
       val expected =
         if (edges.isEmpty) Map.empty[Long, Long]
         else {
@@ -58,8 +55,7 @@ object ConnectedComponentsProps extends Properties("ConnectedComponents") {
           nodes.map(n => n -> m.getOrElse(n, n)).toMap
         }
       (Prop(star.converged) :| "star converged") &&
-        (Prop.?=(starMap, expected) :| "star == model") &&
-        (Prop.?=(mlMap, expected) :| "min-label == model")
+        (Prop.?=(starMap, expected) :| "star == model")
     }
 
   property("canonicalByScore == model argmax(score, -id) per component, all nodes") =

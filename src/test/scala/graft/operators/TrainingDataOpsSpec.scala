@@ -154,48 +154,17 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     assert(got(3L) == (("", 9L))) // exact within-batch copy empties out
   }
 
-  test("connectedComponents: chains collapse to min label, separate components stay apart") {
-    val pairs = Seq(
+  test("connectedComponentsStar: chains collapse to the min id, separate components " +
+      "stay apart, == union-find model on random graphs") {
+    val fixed = Seq(
       (2L, 9L), (9L, 5L),                    // chain with a larger-id middle
       (100L, 101L),                          // separate component
       (11L, 12L), (12L, 13L), (13L, 14L), (14L, 15L) // 5-chain: needs >1 round
     ).toDF("id_a", "id_b")
-    val comp = Dedup.connectedComponents(pairs, "id_a", "id_b", "id")
-      .as[(Long, Long)].collect().toMap
-    assert(comp == Map(2L -> 2L, 9L -> 2L, 5L -> 2L,
+    assert(Dedup.connectedComponentsStar(fixed, "id_a", "id_b", "id")
+      .as[(Long, Long)].collect().toMap == Map(2L -> 2L, 9L -> 2L, 5L -> 2L,
       100L -> 100L, 101L -> 100L,
       11L -> 11L, 12L -> 11L, 13L -> 11L, 14L -> 11L, 15L -> 11L))
-  }
-
-  test("connectedComponents == union-find model on random graphs") {
-    val rnd = new scala.util.Random(48)
-    for (trial <- 1 to 12) {
-      val nNodes = 2 + rnd.nextInt(28)
-      val nEdges = 1 + rnd.nextInt(40)
-      val pairs = Seq.fill(nEdges) {
-        val a = rnd.nextInt(nNodes).toLong
-        var b = rnd.nextInt(nNodes).toLong
-        if (a == b) b = (b + 1) % nNodes
-        (a, b)
-      }
-      // driver union-find model
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      pairs.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val model = parent.keys.toList.map(x => x -> find(x)).toMap
-      val got = Dedup.connectedComponents(pairs.toDF("id_a", "id_b"), "id_a", "id_b", "id")
-        .as[(Long, Long)].collect().toMap
-      assert(got == model, s"trial $trial: $pairs")
-    }
-  }
-
-  test("connectedComponentsStar == union-find model (and min-label) on random graphs") {
     val rnd = new scala.util.Random(96)
     for (trial <- 1 to 12) {
       val nNodes = 2 + rnd.nextInt(28)
@@ -221,15 +190,11 @@ class TrainingDataOpsSpec extends AnyFunSuite {
       assert(star.converged, s"trial $trial did not converge")
       assert(star.components.as[(Long, Long)].collect().toMap == model,
         s"trial $trial: $pairs")
-      val minLabel = Dedup.connectedComponents(
-        pairs.toDF("id_a", "id_b"), "id_a", "id_b", "id")
-        .as[(Long, Long)].collect().toMap
-      assert(minLabel == model, s"trial $trial (min-label): $pairs")
     }
   }
 
   test("star contraction: round count stays logarithmic on a diameter-63 chain; " +
-      "min-label exhausts maxIters and reports the under-merge") {
+      "a maxIters cutoff reports the under-merge") {
     val chain = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val star = Dedup.connectedComponentsStarDetailed(chain, "id_a", "id_b", "id")
     assert(star.converged)
@@ -238,17 +203,13 @@ class TrainingDataOpsSpec extends AnyFunSuite {
     assert(star.rounds <= 10, s"star took ${star.rounds} rounds on a 63-chain")
     assert(star.components.as[(Long, Long)].collect().toMap ==
       (0L to 63L).map(_ -> 0L).toMap)
-    // min-label at maxIters=20 cannot reach the far end of the chain: the
-    // result must be flagged non-converged and is visibly under-merged
-    val ml = Dedup.connectedComponentsDetailed(chain, "id_a", "id_b", "id", maxIters = 20)
-    assert(!ml.converged)
-    assert(ml.components.where(col("comp") =!= 0L).count() > 0,
-      "expected an under-merged label on the far end of the chain")
     // a maxIters cutoff mid-contraction still honors the one-row-per-id
     // contract (residual multi-out-edge nodes collapse to min(dst))
     val cut = Dedup.connectedComponentsStarDetailed(chain, "id_a", "id_b", "id",
       maxIters = 1)
     assert(!cut.converged)
+    assert(cut.components.where(col("comp") =!= 0L).count() > 0,
+      "expected an under-merged label on the far end of the chain")
     val ids = cut.components.select("id").as[Long].collect()
     assert(ids.length == ids.distinct.length && ids.length == 64,
       s"expected 64 unique ids, got ${ids.length} rows")
